@@ -88,13 +88,13 @@ def median(values) -> float:
     return float(statistics.median(values))
 
 
-def closed_loop(op, seconds: float) -> list:
+def closed_loop(op, seconds: float, min_ops: int = 1) -> list:
     """Call ``op()`` back to back, one call at a time, until ``seconds``
-    have passed; the last call starts before then.  -> the results, at
-    least one."""
+    have passed and at least ``min_ops`` calls were made.  -> the
+    results."""
     results = []
     t0 = time.monotonic()
-    while not results or time.monotonic() - t0 < seconds:
+    while len(results) < min_ops or time.monotonic() - t0 < seconds:
         results.append(op())
     return results
 
