@@ -7,7 +7,8 @@ Catalyst query:
 
   1. politeness wave select   (P1/P2/P4: salted per-host window cap)
   2. robots gate              (P5: broadcast rules anti-join)
-  3. crawl-once gate          (D1: bloom/cuckoo prefilter + exact anti-join)
+  3. crawl-once gate          (D1: SeenFilter prefilter — none, bloom,
+                               bloom_table or cuckoo — + exact anti-join)
   4. fetch                    (J5: equi-join wave vs pages on url)
   5. parse + outlink explode  (F5/UDTF: regexp link extraction, JVM-side)
   6. state merge              (frontier', url_seen', metrics)
@@ -38,6 +39,8 @@ import warnings
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import numpy as np
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,7 +80,8 @@ class CrawlConfig:
                                      # factors recomputed from the live
                                      # frontier's skew (adaptive_host_salt:
                                      # hot host shards ~ pending count /
-                                     # (k x median)) — SURVEY §7(e), the
+                                     # (8 x median), at most 256) —
+                                     # SURVEY §7(e), the
                                      # arxiv.org hotspot. The round-5 cost
                                      # story (BENCH/BASELINE.md): leaving
                                      # the pressure aggregation as a
@@ -85,31 +89,13 @@ class CrawlConfig:
                                      # job touching the wave (-25% at the
                                      # 2.4M-page corpus, pinned A/B); the
                                      # loop now COLLECTS the tiny hot-host
-                                     # set once per refresh and joins a
+                                     # set once per wave and joins a
                                      # literal — re-measured par with
                                      # static at 2.4M (44.4k vs 44.2k
                                      # URLs/s), +12% steady on the skewed
                                      # bench corpus, and literally zero
                                      # extra work when no host is hot.
                                      # 'static' restores uniform salting.
-    adaptive_salt_k: int = 8         # hot threshold: pending > k x median
-    adaptive_max_salt: int = 256     # per-host shard cap in adaptive mode
-    adaptive_salt_every: int = 1     # recompute the per-host factors every
-                                     # K-th iteration (skew drifts slowly;
-                                     # the pressure agg is the main
-                                     # adaptive cost, so K=2-3 halves it
-                                     # while staying within one wave of
-                                     # the true skew)
-    adaptive_max_hot_hosts: int = 10_000  # bound on the collected hot-host
-                                     # set: a bimodal frontier can push
-                                     # O(n_hosts) rows over the k x median
-                                     # threshold, and the collect must
-                                     # stay O(bound), not O(hosts). The
-                                     # hottest hosts (largest salt) win
-                                     # the slots; hosts beyond the bound
-                                     # fall back to the uniform base salt
-                                     # — politeness caps still hold, they
-                                     # just shard coarser.
     filter_mode: str = "auto"        # 'auto' (the DEFAULT: bloom under
                                      # auto_filter_threshold expected urls,
                                      # bloom_table above — a deployment
@@ -133,9 +119,6 @@ class CrawlConfig:
                                      # of delta hashes collected) stop being
                                      # trivial, so the filter must live as a
                                      # cogroup-probed table instead
-    parse_mode: str = "stats"        # 'stats' (per-page feature extraction
-                                     # -> records snapshot) | 'none'
-    bloom_fpp: float = 0.01
     n_expected_urls: int = 1_000_000  # bloom sizing (total urls over the run)
     bloom_shards: int = 32           # shard count; at 10^10 urls use ~1024 so
                                      # each shard bitmap stays ~12 MB
@@ -182,7 +165,6 @@ class CrawlConfig:
                                      # durable. 0 = off (historical).
     trap_min_urls: int = 100         # template flag floor (distinct urls)
     trap_min_share_ppm: int = 500_000  # ...and min share of the host's urls
-    trap_max_templates: int = 10_000  # bound on the collected flag set
     max_attempts: int = 1            # P6 retry/backoff in the live loop:
                                      # a gated url whose fetch FAILS (no
                                      # corpus row) re-enters the frontier
@@ -259,6 +241,7 @@ class CrawlResult:
 
 
 _LINK_RE = r'href="([^"]+)"'
+_EMPTY_META = "CAST(map() AS map<string,string>)"
 
 
 def extract_outlinks(
@@ -296,7 +279,7 @@ def extract_outlinks(
     meta_col = (
         F.col("meta")
         if "meta" in fetched.columns
-        else F.expr("CAST(map() AS map<string,string>)")
+        else F.expr(_EMPTY_META)
     )
     if link_meta:
         add = F.map_from_arrays(
@@ -333,24 +316,10 @@ def _snapshot(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.parquet(path)
 
 
-def _persist_cuckoo(spark: SparkSession, ccf: ShardedCuckoo, path: str) -> None:
-    """Persist the resident filter's shard blobs so resume restores it in
-    O(filter bytes). The blobs live on the driver in this mode (they are the
-    broadcast source), so the write is a small driver-built DataFrame — at
-    10^10 urls the filter would instead live as a (shard, table) Iceberg
-    table maintained executor-side, like bloom_table."""
-    spark.createDataFrame(
-        [(s, nb, tb) for s, (nb, tb) in ccf.to_blobs().items()],
-        "shard int, n_buckets long, table binary",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def _load_cuckoo(spark: SparkSession, path: str) -> ShardedCuckoo:
-    rows = spark.read.parquet(path).collect()
-    return ShardedCuckoo.from_blobs(
-        {r["shard"]: (r["n_buckets"], bytes(r["table"])) for r in rows},
-        n_shards=len(rows),
-    )
+def _cut(df: DataFrame, path: str, durable: bool) -> DataFrame:
+    """Truncate lineage: a parquet snapshot at ``path`` when ``durable``,
+    else an eager localCheckpoint (lineage cut, not durable)."""
+    return _snapshot(df, path) if durable else df.localCheckpoint(eager=True)
 
 
 def _write_manifest(state_dir: str, iteration: int, extra: dict | None = None) -> None:
@@ -374,6 +343,29 @@ def _vacuum_snapshots(state_dir: str, keep: int) -> None:
         shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
 
 
+# everything run_crawl writes directly under state_dir besides iter_NNNN
+_STATE_ENTRIES = (
+    "manifest.json", "_manifest.tmp", "url_seen_merge", "edges", "metrics",
+    "bloom_init",
+)
+
+
+def _clear_crawl_state(state_dir: str) -> None:
+    """Remove an earlier crawl's entries (only those) from ``state_dir``."""
+    # stale iter_NNNN dirs would outrank the new run's in the vacuum, and a
+    # stale merge table or edge log would gate and rank against old urls.
+    # (A resume keeps the edge log, edges of crash-lost non-durable
+    # iterations included — a slight over-weighting of already-seen links
+    # that only biases the priority heuristic.)
+    for name in os.listdir(state_dir):
+        if name.startswith("iter_") or name in _STATE_ENTRIES:
+            path = os.path.join(state_dir, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
+
+
 def read_manifest(state_dir: str) -> dict | None:
     p = os.path.join(state_dir, "manifest.json")
     if not os.path.exists(p):
@@ -382,27 +374,222 @@ def read_manifest(state_dir: str) -> dict | None:
         return json.load(f)
 
 
-def run_crawl(
-    spark: SparkSession,
-    pages: DataFrame,
-    seeds: DataFrame,
-    config: CrawlConfig | None = None,
-    robots: DataFrame | None = None,
-    resume: bool = False,
-) -> CrawlResult:
-    """Run the crawl fixpoint to exhaustion or ``max_iterations``.
+def _url_hashes(df: DataFrame) -> DataFrame:
+    return df.select(F.xxhash64("url").alias("url_hash"))
 
-    ``pages``: the corpus (url, warc_ts, html, text, lang[, host]).
-    ``seeds``: initial frontier (url, host, priority, discovered_ts).
-    ``robots``: a parsed rules table (host, allow, path_prefix[,
-    crawl_delay]) — or the string ``"auto"`` to derive the rules from the
-    corpus's own ``/robots.txt`` pages (the Scrapy RobotsTxtMiddleware
-    fetch-and-obey flow: a real crawl fetches robots.txt like any page;
-    here those bodies already sit in the corpus snapshot).
-    Returns per-iteration stats; all state lives in config.state_dir when
-    set (making the run checkpoint-resumable), else in a temp dir.
+
+# --- membership filters ------------------------------------------------------
+# SHARDED filters (round 2): S independent shard bitmaps/tables. 10^10-URL
+# math: 1% fpp needs ~9.6e10 bits (~12 GB) total — a monolithic bitmap is
+# un-buildable and un-broadcastable; with S=1024 each shard is ~12 MB,
+# builds are one task per shard and deltas touch only the shards a wave's
+# hashes route to.
+
+
+class SeenFilter:
+    """Membership prefilter in front of the crawl-once gate's exact
+    url_seen anti-join, one per run_crawl call. This base class is
+    filter_mode 'none'; each subclass owns one mode's state through:
+
+    - ``restore(manifest, url_seen, invalidated, n_invalidated, seen_size)``:
+      an empty filter when ``manifest`` is None, else restored or rebuilt;
+      ``url_seen`` already lacks the recrawl sweep's ``invalidated`` hashes;
+    - ``probe(wave)``: the wave plus a boolean ``_maybe`` column, or None;
+    - ``absorb(fetched, hashes)``: add one wave; the fused metrics pass
+      collects ``hashes`` only for filters that set ``driver_delta``;
+    - ``persist(it_dir, durable)``: cut lineage, return manifest fields.
     """
-    cfg = config or CrawlConfig()
+
+    driver_delta = False
+
+    def __init__(self, spark: SparkSession, cfg: CrawlConfig, state_dir: str):
+        self.spark, self.cfg, self.state_dir = spark, cfg, state_dir
+
+    def restore(self, manifest, url_seen, invalidated, n_invalidated, seen_size):
+        pass
+
+    def probe(self, wave: DataFrame) -> DataFrame | None:
+        return None
+
+    def absorb(self, fetched: DataFrame, hashes) -> None:
+        pass
+
+    def persist(self, it_dir: str, durable: bool) -> dict:
+        return {}
+
+
+class BloomSeenFilter(SeenFilter):
+    """'bloom': the shard bitmaps live on the driver, broadcast into the
+    probe UDF; not persisted, resume rebuilds them from url_seen."""
+
+    driver_delta = True
+
+    def restore(self, manifest, url_seen, invalidated, n_invalidated, seen_size):
+        n, shards = self.cfg.n_expected_urls, self.cfg.bloom_shards
+        if manifest is None:
+            self.bf = ShardedBloom.sized_for(n, n_shards=shards)
+        else:
+            self.bf = build_bloom_sharded(
+                _url_hashes(url_seen), n_items=n, n_shards=shards
+            )
+
+    def probe(self, wave):
+        probe = sharded_might_contain_udf(self.spark, self.bf)
+        return wave.withColumn("_maybe", probe(F.xxhash64("url")))
+
+    def absorb(self, fetched, hashes):
+        self.bf.add(hashes)
+
+
+class BloomTableSeenFilter(SeenFilter):
+    """'bloom_table': a (shard, n_bits, k, bits) table, probed and
+    delta-merged by cogroups on the shard key — zero filter bytes on the
+    driver, the 10^10-URL path (~12 GB of bitmaps live only as a table)."""
+
+    def restore(self, manifest, url_seen, invalidated, n_invalidated, seen_size):
+        path = (manifest or {}).get("bloom")
+        if path and os.path.exists(path):
+            self.table = self.spark.read.parquet(path)
+            return
+        table = empty_bloom_shard_table(
+            self.spark, self.cfg.n_expected_urls, n_shards=self.cfg.bloom_shards
+        )
+        if manifest is not None:
+            table = bloom_merge_delta_cogroup(
+                _url_hashes(url_seen), table, n_shards=self.cfg.bloom_shards
+            )
+        self.table = _snapshot(table, f"{self.state_dir}/bloom_init")
+
+    def probe(self, wave):
+        return bloom_probe_cogroup(
+            wave.withColumn("url_hash", F.xxhash64("url")),
+            self.table,
+            n_shards=self.cfg.bloom_shards,
+        )
+
+    def absorb(self, fetched, hashes):
+        # OR the wave's hashes into the shard bitmaps: a cogroup, planned
+        # here and run by persist() in the commit pool
+        self._next = bloom_merge_delta_cogroup(
+            _url_hashes(fetched), self.table, n_shards=self.cfg.bloom_shards
+        )
+
+    def persist(self, it_dir, durable):
+        self.table = _cut(self._next, f"{it_dir}/bloom", durable)
+        return {"bloom": f"{it_dir}/bloom"} if durable else {}
+
+
+class CuckooSeenFilter(SeenFilter):
+    """'cuckoo': ONE resident delete-capable filter for the whole run, sized
+    for the expected total and delta-updated per wave; durable commits
+    persist its shard blobs so resume restores it in O(filter bytes)."""
+
+    # the blobs live on the driver (they are the broadcast source); at 10^10
+    # urls the filter would live as an executor-side table like bloom_table
+    driver_delta = True
+
+    def restore(self, manifest, url_seen, invalidated, n_invalidated, seen_size):
+        n = max(self.cfg.n_expected_urls, 64)
+        path = (manifest or {}).get("cuckoo")
+        if (
+            path
+            and os.path.exists(path)
+            and n_invalidated <= self.cfg.auto_filter_threshold
+        ):
+            rows = self.spark.read.parquet(path).collect()  # one row per shard
+            self.ccf = ShardedCuckoo.from_blobs(
+                {r["shard"]: (r["n_buckets"], bytes(r["table"])) for r in rows},
+                n_shards=len(rows),
+            )
+            if n_invalidated:
+                # legit delete: the restored filter really contains every
+                # url_seen entry of its snapshot, invalidated ones included.
+                # Bounded collect — above auto_filter_threshold the rebuild
+                # branch runs instead (collecting billions of hashes to
+                # delete one by one would OOM the driver and cost more than
+                # rebuilding from the surviving rows).
+                self.ccf.delete_batch(
+                    np.array([r["h"] for r in invalidated.collect()], dtype=np.int64)
+                )
+        elif manifest is not None:
+            # no persisted filter: rebuild from url_seen — which the recrawl
+            # sweep ALREADY filtered, so there is nothing to delete. Deleting
+            # never-inserted keys would evict colliding fingerprints of live
+            # keys and turn them into false negatives (round-3 ADVICE). The
+            # size must cover the resumed url_seen: a filter sized for fewer
+            # items overflows into false negatives -> re-fetching seen urls.
+            self.ccf = build_cuckoo(
+                _url_hashes(url_seen), n_items=max(seen_size, n)
+            )
+        else:
+            self.ccf = ShardedCuckoo.sized_for(n)
+
+    def probe(self, wave):
+        probe = cuckoo_might_contain_udf(self.spark, self.ccf)
+        return wave.withColumn("_maybe", probe(F.xxhash64("url")))
+
+    def absorb(self, fetched, hashes):
+        # EVERY wave key gets its own fingerprint copy (multiset semantics).
+        # Skipping "already present" keys would skip false-positive
+        # collisions too, and a later delete of such a never-inserted key
+        # (recrawl sweep) would evict the colliding fingerprint of a LIVE
+        # key -> false negative -> crawl-once violated. n inserts leave n
+        # copies, so one delete of an inserted key is always sound.
+        failed = self.ccf.insert_batch(hashes) if len(hashes) else 0
+        if failed:
+            raise ValueError(
+                f"resident cuckoo overflow: {failed} delta inserts failed "
+                f"at iteration — raise n_expected_urls"
+            )
+
+    def persist(self, it_dir, durable):
+        if not durable:
+            return {}
+        path = f"{it_dir}/cuckoo"
+        self.spark.createDataFrame(
+            [(s, nb, tb) for s, (nb, tb) in self.ccf.to_blobs().items()],
+            "shard int, n_buckets long, table binary",
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+        return {"cuckoo": path}
+
+
+_SEEN_FILTERS = {
+    "none": SeenFilter,
+    "bloom": BloomSeenFilter,
+    "bloom_table": BloomTableSeenFilter,
+    "cuckoo": CuckooSeenFilter,
+}
+
+
+def _make_seen_filter(
+    spark: SparkSession, cfg: CrawlConfig, state_dir: str
+) -> SeenFilter:
+    """``cfg.filter_mode`` -> its SeenFilter, resolving 'auto'."""
+    # above auto_filter_threshold expected urls the broadcast bloom's driver
+    # costs (full shard dict resident and re-broadcast, 8 B/url/wave of
+    # hashes collected) stop being trivial
+    mode = cfg.filter_mode
+    if mode == "auto":
+        mode = (
+            "bloom"
+            if cfg.n_expected_urls <= cfg.auto_filter_threshold
+            else "bloom_table"
+        )
+    if mode not in _SEEN_FILTERS:
+        raise ValueError(f"unknown filter_mode: {cfg.filter_mode!r}")
+    return _SEEN_FILTERS[mode](spark, cfg, state_dir)
+
+
+# --- per-wave stages -----------------------------------------------------------
+
+# bounds on the two tiny sets the loop collects to literal DataFrames
+MAX_HOT_HOSTS = 10_000
+MAX_TRAP_TEMPLATES = 10_000
+
+
+def _resolve_robots(pages: DataFrame, robots) -> tuple[DataFrame | None, bool]:
+    """(rules table or None, whether it needs the RFC 9309 gate);
+    ``"auto"`` parses the corpus's own /robots.txt pages."""
     if isinstance(robots, str):
         if robots != "auto":
             raise ValueError(f"robots must be a DataFrame, 'auto', or None: {robots!r}")
@@ -438,21 +625,21 @@ def run_crawl(
             if directive_like > 0:
                 warnings.warn(
                     "robots='auto': the corpus has /robots.txt pages whose "
-                    "bodies carry directives but zero rules parsed — bodies "
+                    "bodies carry directives but zero rules parse — bodies "
                     "are likely whitespace-collapsed extractions; the crawl "
                     "will obey no robots rules",
-                    stacklevel=2,
+                    stacklevel=3,
                 )
             # zero rules == allow-all: dropping the table entirely removes
             # one broadcast-join stage from EVERY wave (and the RFC
             # precedence probe below) with identical gating behavior
             robots.unpersist()
-            robots = None
+            return None, False
     # rules with Allow rows OR RFC 9309 special characters ('*' wildcards,
     # '$' end anchors) need the longest-match gate; the cheap prefix
     # anti-join only handles plain disallow prefixes. Checked once (the
     # rules table is tiny) so the per-wave choice is a plain branch.
-    robots_needs_rfc = (
+    needs_rfc = (
         robots is not None
         and "allow" in robots.columns
         and robots.filter(
@@ -462,17 +649,152 @@ def run_crawl(
         ).limit(1).count()
         > 0
     )
-    if cfg.filter_mode == "auto":
-        from dataclasses import replace as _dc_replace
+    return robots, needs_rfc
 
-        cfg = _dc_replace(
-            cfg,
-            filter_mode="bloom"
-            if cfg.n_expected_urls <= cfg.auto_filter_threshold
-            else "bloom_table",
+
+def _hot_host_salts(spark: SparkSession, frontier: DataFrame) -> DataFrame | None:
+    """The adaptive per-host salts as a literal DataFrame (None: no hot host)."""
+    # the hot-host set is small (hosts above 8 x median, hottest first):
+    # COLLECT it — leaving the aggregation as a subplan re-executes the
+    # full-frontier groupBy inside every job that touches the wave
+    # (measured 2.4 s/wave on an 800k-row frontier). A bimodal frontier can
+    # push O(n_hosts) rows over the threshold, so at most MAX_HOT_HOSTS are
+    # kept; the rest fall back to the uniform base salt — politeness caps
+    # still hold, they just shard coarser. With no hot host the wave skips
+    # the broadcast join entirely.
+    rows = [
+        (r["host"], r["salt"])
+        for r in adaptive_host_salt(frontier)
+        .orderBy(F.col("salt").desc(), "host")
+        .limit(MAX_HOT_HOSTS)
+        .collect()
+    ]
+    return spark.createDataFrame(rows, "host string, salt int") if rows else None
+
+
+def _wave_metrics(fetched: DataFrame, with_hashes: bool):
+    """ONE pass over the fetched wave yields per-partition metrics AND, when
+    ``with_hashes``, the wave's url hashes for a driver-side filter delta —
+    instead of two separate jobs. The driver receives (partition_id, count,
+    hash-bytes) rows: 8 bytes per fetched url, never the filter size.
+    Returns ([(partition_id, n)], int64 hashes or None)."""
+    import pandas as pd
+    from pyspark import TaskContext
+
+    def per_partition(batches):
+        pid = TaskContext.get().partitionId()
+        chunks = []
+        n = 0
+        for pdf in batches:
+            if len(pdf):
+                n += len(pdf)
+                if with_hashes:
+                    chunks.append(pdf.iloc[:, 0].to_numpy(dtype=np.int64))
+        if n:
+            blob = np.concatenate(chunks).tobytes() if with_hashes else b""
+            yield pd.DataFrame({"partition_id": [pid], "n": [n], "hashes": [blob]})
+
+    rows = (
+        _url_hashes(fetched)
+        .mapInPandas(per_partition, "partition_id int, n long, hashes binary")
+        .collect()  # one row per partition
+    )
+    hashes = None
+    if with_hashes:
+        hashes = np.concatenate(
+            [np.zeros(0, dtype=np.int64)]
+            + [np.frombuffer(r["hashes"], dtype=np.int64) for r in rows]
         )
+    return [(r["partition_id"], r["n"]) for r in rows], hashes
+
+
+def _rank_priorities(frontier: DataFrame, edges_path: str, iterations: int) -> DataFrame:
+    """OPIC-style refresh: PageRank over the link graph, normalized to
+    [0, 1], becomes the priority; urls not in the graph keep theirs."""
+    from ..operators.linkrank import pagerank
+
+    ranks = pagerank(
+        frontier.sparkSession.read.parquet(edges_path), iterations=iterations
+    )
+    # [0,1] normalization rides the frontier join as a one-row broadcast
+    # instead of a separate max() collect job; ranks are always > 0 (base
+    # mass), so coalesce only covers the empty-graph null
+    top_df = ranks.agg(F.coalesce(F.max("rank"), F.lit(1.0)).alias("_top"))
+    r = ranks.crossJoin(F.broadcast(top_df)).select(
+        F.col("node").alias("url"),
+        (F.col("rank") / F.col("_top")).alias("_r"),
+    )
+    return (
+        frontier.join(r, "url", "left")
+        .withColumn("priority", F.coalesce(F.col("_r"), F.col("priority")))
+        .drop("_r")
+    )
+
+
+def _trap_templates(
+    spark: SparkSession, seen: DataFrame, min_urls: int, min_share_ppm: int
+) -> DataFrame | None:
+    """Trap-flagged (host, template) pairs of the seen set (None: no trap)."""
+    # collected to a LITERAL broadcast (tiny, bounded) so the per-iteration
+    # gate join never re-executes the detection subplan (the adaptive-salt
+    # lesson)
+    from ..functions.urls import host_of, path_of
+    from ..operators.traps import detect_traps
+
+    rows = (
+        detect_traps(
+            seen.select(
+                "url", host_of("url").alias("host"), path_of("url").alias("path")
+            ),
+            min_urls=min_urls,
+            min_share_ppm=min_share_ppm,
+        )
+        .filter("is_trap")
+        .orderBy(F.col("n_urls").desc(), "host", "template")
+        .limit(MAX_TRAP_TEMPLATES)
+        .select("host", "template")
+        .collect()
+    )
+    return spark.createDataFrame(rows, "host string, template string") if rows else None
+
+
+def _merge_seen(spark: SparkSession, seen_dir: str, wave_seen: DataFrame) -> DataFrame:
+    """MERGE INTO url_seen USING the wave; returns the table read back."""
+    # only the buckets the wave's urls hash into are read and rewritten;
+    # the read-back doubles as lineage truncation. Durable EVERY iteration
+    # at O(|wave| + touched buckets) — vs the O(|seen|) full rewrite.
+    merge_store.merge_upsert(spark, seen_dir, wave_seen, key="url")
+    return merge_store.read_table(spark, seen_dir)
+
+
+def run_crawl(
+    spark: SparkSession,
+    pages: DataFrame,
+    seeds: DataFrame,
+    config: CrawlConfig | None = None,
+    robots: DataFrame | None = None,
+    resume: bool = False,
+) -> CrawlResult:
+    """Run the crawl fixpoint to exhaustion or ``max_iterations``.
+
+    ``pages``: the corpus (url, warc_ts, html, text, lang[, host]).
+    ``seeds``: initial frontier (url, host, priority, discovered_ts).
+    ``robots``: a parsed rules table (host, allow, path_prefix[,
+    crawl_delay]) — or the string ``"auto"`` to derive the rules from the
+    corpus's own ``/robots.txt`` pages (the Scrapy RobotsTxtMiddleware
+    fetch-and-obey flow: a real crawl fetches robots.txt like any page;
+    here those bodies already sit in the corpus snapshot).
+    Returns per-iteration stats; all state lives in config.state_dir when
+    set (making the run checkpoint-resumable), else in a temp dir. A run
+    with ``resume=False`` first removes an earlier crawl's state from it.
+    """
+    cfg = config or CrawlConfig()
     state_dir = cfg.state_dir or f"/tmp/hepcrawl_spark_state_{os.getpid()}_{id(seeds)}"
+    seen_filter = _make_seen_filter(spark, cfg, state_dir)
+    robots, robots_needs_rfc = _resolve_robots(pages, robots)
     os.makedirs(state_dir, exist_ok=True)
+    if not resume:
+        _clear_crawl_state(state_dir)
 
     seen_dir = f"{state_dir}/url_seen_merge"
     # pay-for-use meta threading: the chained-harvest state machinery (map +
@@ -490,43 +812,35 @@ def run_crawl(
     # stamped with depth = parent depth + 1 (seeds count as depth 0);
     # over-deep candidates are filtered before they enter the frontier
     link_meta = cfg.link_meta
+    depth = F.coalesce(
+        F.element_at(F.col("meta"), F.lit("depth")).cast("int"), F.lit(0)
+    )
     if cfg.max_depth is not None:
-        depth_stamp = (
-            F.coalesce(
-                F.element_at(F.col("meta"), F.lit("depth")).cast("int"),
-                F.lit(0),
-            )
-            + 1
-        ).cast("string")
-        link_meta = {**(link_meta or {}), "depth": depth_stamp}
-    start_iter = 0
-    frontier = url_seen = None
+        link_meta = {**(link_meta or {}), "depth": (depth + 1).cast("string")}
+    m = read_manifest(state_dir) if resume else None
+    start_iter = seen_size = 0
     host_used = None  # (host, used) budget-consumption state
     trap_tpls = None  # collected (host, template) trap flags (trap_detect_every)
-    resumed_seen_size = 0
-    if resume:
-        m = read_manifest(state_dir)
-        if m is not None:
-            start_iter = m["iteration"] + 1
-            meta_live = meta_live or bool(m.get("meta_live"))
-            if cfg.host_budget is not None and m.get("host_used"):
-                host_used = spark.read.parquet(m["host_used"])
-            frontier = spark.read.parquet(f"{state_dir}/iter_{m['iteration']:04d}/frontier")
-            if m.get("seen_store") == "merge":
-                # the merge table commits every iteration but the manifest
-                # only every snapshot_every-th: rebase the table onto the
-                # manifest's snapshot so lost-iteration merges are abandoned
-                # (their frontier rows are lost too — state must agree)
-                if "seen_snapshot" in m:
-                    merge_store.rollback(seen_dir, m["seen_snapshot"])
-                url_seen = merge_store.read_table(spark, seen_dir)
-            else:
-                url_seen = spark.read.parquet(f"{state_dir}/iter_{m['iteration']:04d}/url_seen")
-            # the url_seen cardinality must survive the restart: the cuckoo
-            # rebuild is sized from it, and a filter sized for 0 items would
-            # silently overflow -> false negatives -> re-fetching seen URLs.
-            resumed_seen_size = m.get("seen_size") or url_seen.count()
-    if frontier is None:
+    if m is not None:
+        start_iter = m["iteration"] + 1
+        meta_live = meta_live or bool(m.get("meta_live"))
+        if cfg.host_budget is not None and m.get("host_used"):
+            host_used = spark.read.parquet(m["host_used"])
+        frontier = spark.read.parquet(f"{state_dir}/iter_{m['iteration']:04d}/frontier")
+        if m.get("seen_store") == "merge":
+            # the merge table commits every iteration but the manifest
+            # only every snapshot_every-th: rebase the table onto the
+            # manifest's snapshot so lost-iteration merges are abandoned
+            # (their frontier rows are lost too — state must agree)
+            if "seen_snapshot" in m:
+                merge_store.rollback(seen_dir, m["seen_snapshot"])
+            url_seen = merge_store.read_table(spark, seen_dir)
+        else:
+            url_seen = spark.read.parquet(f"{state_dir}/iter_{m['iteration']:04d}/url_seen")
+        # the url_seen cardinality must survive the restart: the cuckoo
+        # rebuild is sized from it
+        seen_size = m.get("seen_size") or url_seen.count()
+    else:
         frontier = seeds.select(
             "url",
             "host",
@@ -542,16 +856,7 @@ def run_crawl(
     # meta threading (FRONTIER_SCHEMA): tolerate meta-less seeds and
     # pre-meta resume snapshots by adding an empty map
     if "meta" not in frontier.columns:
-        frontier = frontier.withColumn(
-            "meta", F.expr("CAST(map() AS map<string,string>)")
-        )
-    if cfg.rank_priorities_every > 0 and not resume:
-        # a fresh run must not rank against a previous run's link graph;
-        # the append-only edge log is only valid within one run lineage.
-        # (Edges appended by crash-lost non-durable iterations of THIS run
-        # survive a resume — a slight, conservative over-weighting of
-        # already-seen links that only biases the priority heuristic.)
-        shutil.rmtree(f"{state_dir}/edges", ignore_errors=True)
+        frontier = frontier.withColumn("meta", F.expr(_EMPTY_META))
     if cfg.seen_store == "merge" and not os.path.exists(f"{seen_dir}/HEAD"):
         # fresh run (or migration from snapshot layout): seed the bucketed
         # table once; every later iteration is a touched-buckets-only MERGE
@@ -563,34 +868,22 @@ def run_crawl(
     # fetch join keys (bucket(url)).
     corpus = pages.select("url", "warc_ts", "text")
 
-    # --- membership filter state (built once, delta-updated) ----------------
-    # SHARDED bloom (round-2): the filter is S independent shard bitmaps.
-    # 10^10-URL math: 1% fpp needs ~9.6e10 bits (~12 GB) total — a monolithic
-    # bitmap is un-buildable (full-size per-partition partials) and
-    # un-broadcastable. With S=1024 each shard is ~12 MB: builds are one
-    # task per shard, deltas touch only the shards a wave's hashes route to,
-    # and at full scale the filter lives as a (shard, bits) parquet/Iceberg
-    # table probed via bloom_probe_cogroup — zero driver state. In-sandbox
-    # the driver keeps the (small) shard dict and broadcasts it.
     # --- re-crawl policy sweep (reference middlewares.py:134-155: a newer
     # capture invalidates the stored entry). Entries older than the cutoff
-    # leave url_seen — and, in cuckoo mode below, their fingerprints are
-    # DELETED from the resident filter (the delete capability that justifies
-    # cuckoo over bloom). The driver sees ONE scalar here (the invalidated
-    # count); the hash list itself is only collected in the cuckoo branch
-    # below, and only when that count is under `auto_filter_threshold` —
-    # a coarse cutoff over a 10^10-URL seen set invalidates billions of
-    # rows, where collecting them would OOM the driver (round-5 verdict
-    # What's-wrong #1) and rebuilding the filter from the surviving rows
-    # is strictly cheaper.
-    invalidated_df = None
+    # leave url_seen, and the seen filter's restore drops their hashes where
+    # it can delete (cuckoo). The driver sees ONE scalar here (the
+    # invalidated count); only the filter may collect the hash list, and
+    # only under `auto_filter_threshold` — a coarse cutoff over a
+    # 10^10-URL seen set invalidates billions of rows (round-5 verdict
+    # What's-wrong #1).
+    invalidated = None
     n_invalidated = 0
-    if cfg.recrawl_cutoff is not None and start_iter > 0:
+    if cfg.recrawl_cutoff is not None and m is not None:
         cut = F.to_timestamp(F.lit(cfg.recrawl_cutoff))
-        invalidated_df = url_seen.filter(F.col("last_ts") < cut).select(
+        invalidated = url_seen.filter(F.col("last_ts") < cut).select(
             F.xxhash64("url").alias("h")
         )
-        n_invalidated = invalidated_df.count()
+        n_invalidated = invalidated.count()
         url_seen = url_seen.filter(F.col("last_ts") >= cut)
         if cfg.seen_store == "merge":
             # MERGE ... WHEN MATCHED AND stale THEN DELETE: rewrites only
@@ -599,193 +892,23 @@ def run_crawl(
                 spark, seen_dir, f"last_ts < timestamp '{cfg.recrawl_cutoff}'"
             )
             url_seen = merge_store.read_table(spark, seen_dir)
-        seen_size = max(0, resumed_seen_size - n_invalidated)
-        resumed_seen_size = seen_size
-
-    bf: ShardedBloom | None = None
-    bloom_tbl: DataFrame | None = None
-    ccf: ShardedCuckoo | None = None
-    if cfg.filter_mode == "bloom":
-        seen_now = url_seen if resume and start_iter > 0 else None
-        if seen_now is not None:
-            bf = build_bloom_sharded(
-                seen_now.select(F.xxhash64("url").alias("url_hash")),
-                n_items=cfg.n_expected_urls,
-                fpp=cfg.bloom_fpp,
-                n_shards=cfg.bloom_shards,
-            )
-        else:
-            bf = ShardedBloom.sized_for(
-                cfg.n_expected_urls, cfg.bloom_fpp, cfg.bloom_shards
-            )
-    elif cfg.filter_mode == "bloom_table":
-        # filter-as-table: resume from the manifest's bloom snapshot if
-        # present, else rebuild distributed from url_seen. The driver only
-        # ever plans these jobs — no bitmap/hash bytes cross to it.
-        m = read_manifest(state_dir) if resume else None
-        if m is not None and m.get("bloom") and os.path.exists(m["bloom"]):
-            bloom_tbl = spark.read.parquet(m["bloom"])
-        else:
-            bloom_tbl = empty_bloom_shard_table(
-                spark, cfg.n_expected_urls, cfg.bloom_fpp, cfg.bloom_shards
-            )
-            if resume and start_iter > 0:
-                bloom_tbl = bloom_merge_delta_cogroup(
-                    url_seen.select(F.xxhash64("url").alias("url_hash")),
-                    bloom_tbl,
-                    n_shards=cfg.bloom_shards,
-                )
-            bloom_tbl = _snapshot(bloom_tbl, f"{state_dir}/bloom_init")
-    elif cfg.filter_mode == "cuckoo":
-        # ONE resident filter for the whole run, sized for the expected
-        # total; every iteration applies the wave DELTA (insert_batch of
-        # new keys) instead of the round-2 full O(|seen|) rebuild. Durable
-        # commits persist the shard blobs, so resume restores the filter in
-        # O(filter bytes) — no O(|seen|) rebuild at all.
-        m = read_manifest(state_dir) if resume else None
-        if (
-            m is not None
-            and m.get("cuckoo")
-            and os.path.exists(m["cuckoo"])
-            and n_invalidated <= cfg.auto_filter_threshold
-        ):
-            ccf = _load_cuckoo(spark, m["cuckoo"])
-            if n_invalidated:
-                # legit delete: the restored filter really contains every
-                # url_seen entry of its snapshot, invalidated ones included.
-                # Bounded collect — the n_invalidated > threshold case takes
-                # the rebuild branch below instead (collecting billions of
-                # hashes to delete one-by-one would OOM the driver and cost
-                # more than rebuilding from the surviving rows).
-                import numpy as np
-
-                hashes = np.array(
-                    [r["h"] for r in invalidated_df.collect()], dtype=np.int64
-                )
-                ccf.delete_batch(hashes)
-        elif resume and start_iter > 0:
-            # pre-persistence snapshot: rebuild from url_seen — which the
-            # recrawl sweep above ALREADY filtered, so there is nothing to
-            # delete. Deleting never-inserted keys here would evict
-            # colliding fingerprints of live keys and turn them into false
-            # negatives (round-3 ADVICE).
-            ccf = build_cuckoo(
-                url_seen.select(F.xxhash64("url").alias("url_hash")),
-                n_items=max(resumed_seen_size, cfg.n_expected_urls, 64),
-            )
-        else:
-            ccf = ShardedCuckoo.sized_for(max(cfg.n_expected_urls, 64))
-
-    def _metrics_and_filter_delta(fetched: DataFrame):
-        """ONE pass over the fetched wave yields per-partition metrics AND
-        (broadcast bloom / resident cuckoo modes) the wave's url hashes for
-        the filter's delta update — instead of two separate jobs. Driver
-        receives (partition_id, count, hash-bytes) rows: delta bytes are
-        proportional to the WAVE (8 bytes per fetched url), never to the
-        filter size. In 'bloom_table' mode NO hashes are collected at all —
-        the delta merges executor-side via bloom_merge_delta_cogroup (the
-        zero-driver 10^10-URL path)."""
-        import numpy as np
-        import pandas as pd
-        from pyspark import TaskContext
-
-        with_delta = bf is not None or ccf is not None
-
-        def per_partition(batches):
-            pid = TaskContext.get().partitionId()
-            chunks = []
-            n = 0
-            for pdf in batches:
-                if len(pdf):
-                    n += len(pdf)
-                    if with_delta:
-                        chunks.append(pdf.iloc[:, 0].to_numpy(dtype=np.int64))
-            if n:
-                blob = np.concatenate(chunks).tobytes() if with_delta else b""
-                yield pd.DataFrame(
-                    {"partition_id": [pid], "n": [n], "hashes": [blob]}
-                )
-
-        rows = (
-            fetched.select(F.xxhash64("url").alias("url_hash"))
-            .mapInPandas(per_partition, "partition_id int, n long, hashes binary")
-            .collect()
-        )
-        if with_delta:
-            import numpy as np
-
-            h = (
-                np.concatenate(
-                    [np.frombuffer(r["hashes"], dtype=np.int64) for r in rows]
-                )
-                if rows
-                else np.zeros(0, dtype=np.int64)
-            )
-            if bf is not None:
-                bf.add(h)
-            elif ccf is not None and len(h):
-                # delta insert: EVERY wave key gets its own fingerprint copy
-                # (multiset semantics). The round-3 code pre-filtered with
-                # might_contain to skip "already present" keys — but a skip
-                # on a FALSE-POSITIVE collision meant that key was never
-                # actually inserted, and a later delete of it (recrawl
-                # sweep) would evict the colliding fingerprint of a LIVE
-                # key -> false negative -> crawl-once violated. Inserting
-                # unconditionally costs ~fpp extra load and makes
-                # delete_batch of any inserted key always sound: n inserts
-                # leave n copies, one delete removes one.
-                failed = ccf.insert_batch(h)
-                if failed:
-                    raise ValueError(
-                        f"resident cuckoo overflow: {failed} delta inserts "
-                        f"failed at iteration — raise n_expected_urls"
-                    )
-        return [(r["partition_id"], r["n"]) for r in rows]
+        seen_size = max(0, seen_size - n_invalidated)
+    seen_filter.restore(m, url_seen, invalidated, n_invalidated, seen_size)
 
     result = CrawlResult()
     metrics_rows = []
-    seen_size = resumed_seen_size
-    _UNSET = object()  # adaptive-salt cache sentinel ("not yet computed";
-    host_salts_df = _UNSET  # None is a valid cached value = no hot hosts)
 
     for it in range(start_iter, cfg.max_iterations):
         t0 = time.monotonic()
+        it_dir = f"{state_dir}/iter_{it:04d}"
 
         # 1-2. politeness + robots. The PRE-robots wave is persisted and is
         # what later retires rows from the frontier — robots-disallowed URLs
         # must be removed too, or they are re-selected every iteration and
         # permanently starve allowed same-host URLs below the politeness cap.
-        host_salts = None
-        if cfg.salt_mode == "adaptive":
-            # the hot-host set is small (hosts above k x median, capped at
-            # adaptive_max_hot_hosts, hottest first): COLLECT it once and
-            # build a literal DataFrame — leaving the aggregation as a
-            # subplan re-executes the full-frontier groupBy inside every
-            # job that touches the wave (measured 2.4 s/wave on an
-            # 800k-row frontier). The literal DataFrame itself is CACHED
-            # across iterations and only rebuilt on refresh. A corpus
-            # with NO hot host skips the broadcast join entirely
-            # (identical to the static path at zero extra cost).
-            if host_salts_df is _UNSET or (
-                (it - start_iter) % max(1, cfg.adaptive_salt_every) == 0
-            ):
-                salts_rows = [
-                    (r["host"], r["salt"])
-                    for r in adaptive_host_salt(
-                        frontier,
-                        k_times_median=cfg.adaptive_salt_k,
-                        max_salt=cfg.adaptive_max_salt,
-                    )
-                    .orderBy(F.col("salt").desc(), "host")
-                    .limit(cfg.adaptive_max_hot_hosts)
-                    .collect()
-                ]
-                host_salts_df = (
-                    spark.createDataFrame(salts_rows, "host string, salt int")
-                    if salts_rows
-                    else None
-                )
-            host_salts = host_salts_df
+        host_salts = (
+            _hot_host_salts(spark, frontier) if cfg.salt_mode == "adaptive" else None
+        )
         fetch_caps = None
         eff_cap = cfg.max_per_host
         if cfg.host_budget is not None:
@@ -810,176 +933,68 @@ def run_crawl(
         # 'Disallow: / + Allow: /public/' robots.txt must NOT black-hole
         # the whole host); the cheaper prefix anti-join covers the
         # disallow-only common case. Both gates are broadcast-side only.
-        wave = (
-            (robots_gate_rfc if robots_needs_rfc else robots_gate)(
-                wave_pre, robots
-            )
-            if robots is not None
-            else wave_pre
-        )
+        wave = wave_pre
+        if robots is not None:
+            wave = (robots_gate_rfc if robots_needs_rfc else robots_gate)(wave_pre, robots)
 
-        # 3. crawl-once gate with membership prefilter. The probed wave is
-        # persisted: the gate's fresh/maybe split reads it twice, and without
-        # the cache the politeness window (a shuffle) would run twice.
-        use_filter = it > start_iter or (resume and start_iter > 0)
-        wave_probed = None
-        if cfg.filter_mode == "bloom" and use_filter:
-            probe = sharded_might_contain_udf(spark, bf)
-            wave_probed = (
-                wave.withColumn("warc_ts", F.col("discovered_ts"))
-                .withColumn("_maybe", probe(F.xxhash64("url")))
-                .persist()
+        # 3. crawl-once gate behind the seen filter's probe (nothing to
+        # probe before the first wave of a fresh run). The probed wave is
+        # persisted: the gate's fresh/maybe split reads it twice, and
+        # without the cache the politeness window (a shuffle) would run twice.
+        wave = wave.withColumn("warc_ts", F.col("discovered_ts"))
+        wave_probed = seen_filter.probe(wave) if it > 0 else None
+        if wave_probed is not None:
+            wave_probed = wave_probed.persist()
+            gated = crawl_once_gate(
+                wave_probed, url_seen, might_be_seen=F.col("_maybe")
             )
-            gated = crawl_once_gate(
-                wave_probed, url_seen, might_be_seen=F.col("_maybe")
-            ).drop("_maybe", "warc_ts")
-        elif cfg.filter_mode == "bloom_table" and use_filter:
-            # zero-driver probe: cogroup the wave with the shard table on
-            # the shard key — one shuffle, no broadcast, no filter bytes on
-            # the driver (this is the path a 10^10-URL filter must take:
-            # ~12 GB of bitmaps can live only as a table).
-            wave_probed = bloom_probe_cogroup(
-                wave.withColumn("warc_ts", F.col("discovered_ts")).withColumn(
-                    "url_hash", F.xxhash64("url")
-                ),
-                bloom_tbl,
-                n_shards=cfg.bloom_shards,
-            ).persist()
-            gated = crawl_once_gate(
-                wave_probed, url_seen, might_be_seen=F.col("_maybe")
-            ).drop("_maybe", "warc_ts", "url_hash")
-        elif cfg.filter_mode == "cuckoo" and use_filter:
-            # resident filter probe — ccf was built ONCE (empty or from the
-            # resume snapshot) and is delta-updated per wave; the round-2
-            # O(|seen|) per-iteration rebuild is gone.
-            probe = cuckoo_might_contain_udf(spark, ccf)
-            wave_probed = (
-                wave.withColumn("warc_ts", F.col("discovered_ts"))
-                .withColumn("_maybe", probe(F.xxhash64("url")))
-                .persist()
-            )
-            gated = crawl_once_gate(
-                wave_probed, url_seen, might_be_seen=F.col("_maybe")
-            ).drop("_maybe", "warc_ts")
         else:
-            gated = crawl_once_gate(
-                wave.withColumn("warc_ts", F.col("discovered_ts")), url_seen
-            ).drop("warc_ts")
-
-        gated = gated.persist()
+            gated = crawl_once_gate(wave, url_seen)
+        gated = gated.drop("_maybe", "warc_ts", "url_hash").persist()
 
         # 4. fetch join (J5)
         fetched = gated.join(corpus, "url", "inner").persist()
+        cached = [df for df in (gated, fetched, wave_pre, wave_probed) if df is not None]
 
         # one action yields per-partition metrics (A2/north rule), the fetched
-        # count, and the bloom delta bitmaps — fused into a single pass
-        part_metrics = _metrics_and_filter_delta(fetched)
+        # count, and the filter's delta hashes — fused into a single pass
+        part_metrics, hashes = _wave_metrics(fetched, seen_filter.driver_delta)
+        seen_filter.absorb(fetched, hashes)
         fetched_n = sum(n for _, n in part_metrics)
         # exact scheduled count costs one more plan+job per iteration; in
         # fast mode approximate it by fetched (equal whenever every gated
         # url exists in the corpus — always true for the synthetic graph)
         scheduled = gated.count() if cfg.detailed_stats else fetched_n
-        if scheduled == 0:
-            # nothing fetched — but the wave may still be nonempty (all rows
-            # robots-blocked or already-seen). Those rows must be RETIRED
-            # from the frontier, not left to be re-selected forever; only an
-            # empty wave terminates the crawl. The extra count() runs solely
-            # on this rare path.
-            wave_n = wave_pre.count()
-            if wave_n == 0:
-                gated.unpersist()
-                fetched.unpersist()
-                if wave_probed is not None:
-                    wave_probed.unpersist()
-                wave_pre.unpersist()
-                break
-            it_dir = f"{state_dir}/iter_{it:04d}"
-            retired = frontier.join(wave_pre.select("url"), "url", "left_anti")
-            if cfg.max_attempts > 1:
-                # P6 must fire here too: a wave whose fetches ALL failed
-                # lands on this branch (fetched_n == 0 in fast mode), and
-                # without re-admission every url would silently drop at
-                # attempt 0 instead of retrying to max_attempts — behavior
-                # would diverge from detailed_stats=True runs, which route
-                # the same wave through the main path's retry.
-                failed = gated.join(corpus.select("url"), "url", "left_anti")
-                retry0 = decay_priority(
-                    failed.filter(F.col("attempt") < cfg.max_attempts - 1),
-                    decay=cfg.retry_decay,
-                )
-                retired = retired.unionByName(
-                    retry0.select(
-                        "url", "host", "priority", "discovered_ts",
-                        "attempt", "meta",
-                    )
-                )
-            frontier = _snapshot(retired, f"{it_dir}/frontier")
-            gated.unpersist()
-            fetched.unpersist()
-            if wave_probed is not None:
-                wave_probed.unpersist()
-            if cfg.seen_store == "merge":
-                # url_seen unchanged this iteration and the merge table is
-                # already durable — no rewrite, manifest keeps pointing at it
-                seen_ref = seen_dir
-            else:
-                url_seen = _snapshot(url_seen, f"{it_dir}/url_seen")
-                seen_ref = f"{it_dir}/url_seen"
-            extra = {
-                "frontier": f"{it_dir}/frontier",
-                "url_seen": seen_ref,
-                "seen_store": cfg.seen_store,
-                "seen_size": seen_size,
-                "meta_live": meta_live,
-            }
-            if cfg.seen_store == "merge":
-                extra["seen_snapshot"] = merge_store.current_snapshot(seen_dir)
-            if bloom_tbl is not None:
-                # state unchanged this iteration, but the snapshot must move
-                # with the manifest or the vacuum strands it
-                bloom_tbl = _snapshot(bloom_tbl, f"{it_dir}/bloom")
-                extra["bloom"] = f"{it_dir}/bloom"
-            if ccf is not None:
-                _persist_cuckoo(spark, ccf, f"{it_dir}/cuckoo")
-                extra["cuckoo"] = f"{it_dir}/cuckoo"
-            if cfg.host_budget is not None:
-                host_used = _snapshot(host_used, f"{it_dir}/host_used")
-                extra["host_used"] = f"{it_dir}/host_used"
-            _write_manifest(state_dir, it, extra)
-            wave_pre.unpersist()
-            # vacuum old snapshots here too: consecutive empty-fetch
-            # iterations (a long robots-blocked tail) would otherwise
-            # accumulate iter_NNNN dirs past keep_snapshots unbounded
-            # (round-2 ADVICE).
-            _vacuum_snapshots(state_dir, cfg.keep_snapshots)
-            result.iterations.append(
-                IterationStats(it, 0, 0, 0, -1, seen_size, time.monotonic() - t0)
-            )
-            continue
+        # nothing scheduled, but the wave may still be nonempty (all rows
+        # robots-blocked, already seen or failed): those rows are retired
+        # (or retried) by the state merge below like any other wave; only
+        # an empty wave terminates the crawl. The count runs on this rare
+        # path only.
+        if scheduled == 0 and wave_pre.count() == 0:
+            for df in cached:
+                df.unpersist()
+            break
         metrics_rows.extend(
             (it, pid, scheduled, n, n, 0) for pid, n in part_metrics
         )
 
         # 5. parse: per-page feature extraction (the HEPRecord-emission role;
         # on the synthetic corpus the record is the textstats feature row)
-        # + outlink explosion
-        it_dir = f"{state_dir}/iter_{it:04d}"
-        records = None
-        if cfg.parse_mode == "stats":
-            # fused single-Arrow-pass feature extraction — bit-equal to the
-            # individual column expressions (pinned by test) but the text
-            # crosses to the python worker ONCE instead of being re-scanned
-            # and re-allocated by several JVM regex expressions. `meta`
-            # rides along: hop-2 records carry the hop-1 state that
-            # discovered them (the PoS/EDP chained-harvest contract).
-            records = X.record_features(
+        # + outlink explosion. Fused single-Arrow-pass features — bit-equal
+        # to the individual column expressions (pinned by test); `meta`
+        # rides along: hop-2 records carry the hop-1 state that discovered
+        # them (the PoS/EDP chained-harvest contract).
+        records = (
+            X.record_features(
                 fetched, keep_cols=("url", "meta") if meta_live else ("url",)
             )
-
+            if scheduled
+            else None
+        )
         links = extract_outlinks(
             fetched, link_meta=link_meta, thread_meta=meta_live
         )
-        if cfg.rank_priorities_every > 0:
+        if scheduled and cfg.rank_priorities_every > 0:
             # append this wave's (parent -> url) edges to the crawl's link
             # graph log; the periodic rank refresh reads it back. One narrow
             # write over the cached wave — no shuffle.
@@ -1005,15 +1020,12 @@ def run_crawl(
             .withColumn("attempt", F.lit(0))
         )
         if not meta_live:
-            new_frontier_rows = new_frontier_rows.withColumn(
-                "meta", F.expr("CAST(map() AS map<string,string>)")
-            )
+            new_frontier_rows = new_frontier_rows.withColumn("meta", F.expr(_EMPTY_META))
 
         # 6. state merge
+        wave_seen = fetched.select("url", F.col("warc_ts").alias("last_ts"))
         new_seen = (
-            url_seen.unionByName(
-                fetched.select("url", F.col("warc_ts").alias("last_ts"))
-            )
+            url_seen.unionByName(wave_seen)
             .groupBy("url")
             .agg(F.max("last_ts").alias("last_ts"))
         )
@@ -1026,13 +1038,7 @@ def run_crawl(
             remaining.select("url"), "url", "left_anti"
         )
         if cfg.max_depth is not None:
-            candidates = candidates.filter(
-                F.coalesce(
-                    F.element_at(F.col("meta"), F.lit("depth")).cast("int"),
-                    F.lit(0),
-                )
-                <= cfg.max_depth
-            )
+            candidates = candidates.filter(depth <= cfg.max_depth)
         frontier_cols = [
             "url", "host", "priority", "discovered_ts", "attempt", "meta"
         ]
@@ -1060,75 +1066,19 @@ def run_crawl(
             next_frontier = next_frontier.unionByName(
                 retry.select(*frontier_cols)
             )
-        rank_refresh = None
-        if (
-            cfg.rank_priorities_every > 0
+        # the periodic refreshes skip a wave that scheduled nothing
+        rank_due = (
+            scheduled
+            and cfg.rank_priorities_every > 0
             and (it + 1) % cfg.rank_priorities_every == 0
-        ):
-            # OPIC-style refresh: PageRank over the accumulated link graph,
-            # normalized to [0, 1], becomes the dispatch priority — pages
-            # many crawled pages point at move to the head of the politeness
-            # queue. Urls not yet in the graph keep their current priority.
-            # Deferred into the frontier-commit thunk below: pagerank runs
-            # eager checkpoints internally, and executing it here would
-            # SERIALIZE the whole refresh before the commit pool starts —
-            # inside the thunk it overlaps the independent url_seen / bloom
-            # / records commits (guide §2.6). The edge log is complete at
-            # this point (this wave's links were appended above), so ranks
-            # are identical either way.
-            def rank_refresh(df):
-                from ..operators.linkrank import pagerank
-
-                ranks = pagerank(
-                    spark.read.parquet(f"{state_dir}/edges"),
-                    iterations=cfg.rank_iterations,
-                )
-                # [0,1] normalization rides the frontier join as a one-row
-                # broadcast instead of a separate max() collect job; ranks
-                # are always > 0 (base mass), so coalesce only covers the
-                # empty-graph null exactly like the old `or 1.0`
-                top_df = ranks.agg(
-                    F.coalesce(F.max("rank"), F.lit(1.0)).alias("_top")
-                )
-                r = ranks.crossJoin(F.broadcast(top_df)).select(
-                    F.col("node").alias("url"),
-                    (F.col("rank") / F.col("_top")).alias("_r"),
-                )
-                return (
-                    df.join(r, "url", "left")
-                    .withColumn(
-                        "priority", F.coalesce(F.col("_r"), F.col("priority"))
-                    )
-                    .drop("_r")
-                )
-
+        )
         if (
-            cfg.trap_detect_every > 0
+            scheduled
+            and cfg.trap_detect_every > 0
             and (it + 1) % cfg.trap_detect_every == 0
         ):
-            from ..functions.urls import host_of, path_of
-            from ..operators.traps import detect_traps
-
-            flagged = (
-                detect_traps(
-                    new_seen.select(
-                        "url",
-                        host_of("url").alias("host"),
-                        path_of("url").alias("path"),
-                    ),
-                    min_urls=cfg.trap_min_urls,
-                    min_share_ppm=cfg.trap_min_share_ppm,
-                )
-                .filter("is_trap")
-                .orderBy(F.col("n_urls").desc(), "host", "template")
-                .limit(cfg.trap_max_templates)
-                .select("host", "template")
-            )
-            rows = flagged.collect()
-            trap_tpls = (
-                spark.createDataFrame(rows, "host string, template string")
-                if rows
-                else None
+            trap_tpls = _trap_templates(
+                spark, new_seen, cfg.trap_min_urls, cfg.trap_min_share_ppm
             )
         if trap_tpls is not None:
             from ..functions.urls import path_of
@@ -1143,12 +1093,11 @@ def run_crawl(
 
         if cfg.host_budget is not None:
             # carry-over: fold this wave's per-host fetch counts into the
-            # running consumption state (tiny: one row per host ever seen)
-            # charge the budget by DISTINCT url: `fetched` is the gated
-            # INNER join against the corpus on url, so a corpus holding
-            # multiple captures per url (multiple warc_ts — the recrawl
-            # scenario) multiplies the join and a plain count(*) would
-            # charge one admitted fetch N times.
+            # running consumption state (tiny: one row per host ever seen).
+            # Charged by DISTINCT url: `fetched` is the gated INNER join
+            # against the corpus on url, so a corpus holding multiple
+            # captures per url (the recrawl scenario) multiplies the join
+            # and a plain count(*) would charge one admitted fetch N times.
             host_used = (
                 host_used.unionByName(
                     fetched.groupBy("host").agg(
@@ -1159,102 +1108,63 @@ def run_crawl(
                 .agg(F.sum("used").alias("used"))
             )
 
-        # bloom_table delta: OR the wave's hashes into the shard bitmaps —
-        # a cogroup job, still zero filter bytes on the driver
-        new_bloom = None
-        if bloom_tbl is not None:
-            new_bloom = bloom_merge_delta_cogroup(
-                fetched.select(F.xxhash64("url").alias("url_hash")),
-                bloom_tbl,
-                n_shards=cfg.bloom_shards,
-            )
-
-        # 7. snapshot (data first, manifest last = atomic commit). The
-        # writes (records sink, frontier/url_seen/bloom state) are
-        # INDEPENDENT jobs over the already-cached `fetched` + the previous
-        # parquet state, so they are submitted concurrently from driver
-        # threads — the Spark scheduler interleaves them across the executor
-        # pool. This removes per-iteration serial job-commit latencies that
-        # dominated the round-1 fixed cost (~8-9 s/iteration of planning +
-        # commit measured in BENCH/BASELINE.md).
+        # 7. commit: data first, manifest last = atomic commit. The state
+        # cuts (frontier, url_seen, filter, host budget) and the records
+        # sink are INDEPENDENT jobs over the cached `fetched` + the previous
+        # state, so they run concurrently from driver threads and the Spark
+        # scheduler interleaves them across the executor pool — removing
+        # the serial job-commit latencies that dominated the round-1 fixed
+        # cost (BENCH/BASELINE.md). Each thread inherits the caller's job
+        # group and local properties.
         #
         # With snapshot_every=K only every K-th iteration is DURABLE
-        # (parquet + manifest); in between, state is localCheckpoint'ed —
-        # lineage still truncates (mandatory in any DataFrame fixpoint) but
-        # the two write+read job commits are skipped. Resume replays from
-        # the last durable manifest. At 100 TB durable = Iceberg snapshot
-        # commit and K trades recovery replay depth against commit latency.
+        # (parquet + manifest); in between, state is localCheckpoint'ed and
+        # resume replays from the last durable manifest. At 100 TB durable
+        # = Iceberg snapshot commit and K trades recovery replay depth
+        # against commit latency.
         durable = (
             cfg.snapshot_every <= 1
             or (it + 1) % cfg.snapshot_every == 0
             or it == cfg.max_iterations - 1  # final iteration always commits
         )
-        def _merge_seen() -> DataFrame:
-            # MERGE INTO url_seen USING wave: only the buckets the wave's
-            # urls hash into are read+rewritten; the merged table read back
-            # from the new manifest doubles as lineage truncation. Durable
-            # EVERY iteration at O(|wave|+touched buckets) cost — the
-            # merge store's whole point vs the O(|seen|) full rewrite.
-            merge_store.merge_upsert(
-                spark,
-                seen_dir,
-                fetched.select("url", F.col("warc_ts").alias("last_ts")),
-                key="url",
-            )
-            return merge_store.read_table(spark, seen_dir)
 
-        if rank_refresh is not None:
-            # evaluated INSIDE the frontier future so the multi-job rank
-            # refresh overlaps the other commits
-            _nf = next_frontier
-
-            def _frontier_df(df=_nf):
-                return rank_refresh(df)
-        else:
-            def _frontier_df(df=next_frontier):
-                return df
+        def frontier_commit(df=next_frontier, rank_due=rank_due):
+            # the multi-job rank refresh runs INSIDE this future so it
+            # overlaps the other commits (this wave's edges are already
+            # appended, so ranks are identical either way)
+            if rank_due:
+                df = _rank_priorities(df, f"{state_dir}/edges", cfg.rank_iterations)
+            return _cut(df, f"{it_dir}/frontier", durable)
 
         with ThreadPoolExecutor(max_workers=4) as pool:
-            if durable:
-                futs = {
-                    "frontier": pool.submit(
-                        lambda: _snapshot(_frontier_df(), f"{it_dir}/frontier")
-                    ),
-                    "url_seen": pool.submit(_merge_seen)
-                    if cfg.seen_store == "merge"
-                    else pool.submit(_snapshot, new_seen, f"{it_dir}/url_seen"),
-                }
-                if new_bloom is not None:
-                    futs["bloom"] = pool.submit(
-                        _snapshot, new_bloom, f"{it_dir}/bloom"
-                    )
-            else:
-                futs = {
-                    "frontier": pool.submit(
-                        lambda: _frontier_df().localCheckpoint(eager=True)
-                    ),
-                    "url_seen": pool.submit(_merge_seen)
-                    if cfg.seen_store == "merge"
-                    else pool.submit(
-                        lambda df=new_seen: df.localCheckpoint(eager=True)
-                    ),
-                }
-                if new_bloom is not None:
-                    futs["bloom"] = pool.submit(
-                        lambda df=new_bloom: df.localCheckpoint(eager=True)
-                    )
-            if records is not None:
-                futs["records"] = pool.submit(
-                    lambda: records.write.mode("overwrite").parquet(
-                        f"{it_dir}/records"
-                    )
-                )
-            next_frontier = futs["frontier"].result()
-            new_seen = futs["url_seen"].result()
-            if "bloom" in futs:
-                bloom_tbl = futs["bloom"].result()
-            if "records" in futs:
-                futs["records"].result()
+            def submit(fn, *args):
+                # wrapped per task: each gets its own copy of the caller's
+                # local properties (job group, description) and tags
+                return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+            frontier_f = submit(frontier_commit)
+            seen_f = (
+                submit(_merge_seen, spark, seen_dir, wave_seen)
+                if cfg.seen_store == "merge"
+                else submit(_cut, new_seen, f"{it_dir}/url_seen", durable)
+            )
+            filter_f = submit(seen_filter.persist, it_dir, durable)
+            budget_f = (
+                submit(_cut, host_used, f"{it_dir}/host_used", durable)
+                if host_used is not None
+                else None
+            )
+            records_f = (
+                submit(records.write.mode("overwrite").parquet, f"{it_dir}/records")
+                if records is not None
+                else None
+            )
+            next_frontier, new_seen = frontier_f.result(), seen_f.result()
+            filter_fields = filter_f.result()
+            if budget_f is not None:
+                host_used = budget_f.result()
+            if records_f is not None:
+                records_f.result()
         if cfg.detailed_stats:
             new_frontier_size = next_frontier.count()
             seen_size = new_seen.count()
@@ -1263,7 +1173,7 @@ def run_crawl(
             seen_size += fetched_n  # upper bound (exact when urls are unique)
 
         if durable:
-            manifest_extra = {
+            manifest = {
                 "frontier": f"{it_dir}/frontier",
                 "url_seen": seen_dir
                 if cfg.seen_store == "merge"
@@ -1271,33 +1181,13 @@ def run_crawl(
                 "seen_store": cfg.seen_store,
                 "seen_size": seen_size,
                 "meta_live": meta_live,
+                **filter_fields,
             }
             if cfg.seen_store == "merge":
-                manifest_extra["seen_snapshot"] = merge_store.current_snapshot(
-                    seen_dir
-                )
-            if new_bloom is not None:
-                manifest_extra["bloom"] = f"{it_dir}/bloom"
-            if ccf is not None:
-                # the resident filter already absorbed this wave's delta —
-                # persist its blobs beside the snapshot for O(bytes) resume
-                _persist_cuckoo(spark, ccf, f"{it_dir}/cuckoo")
-                manifest_extra["cuckoo"] = f"{it_dir}/cuckoo"
-            if cfg.host_budget is not None:
-                host_used = _snapshot(host_used, f"{it_dir}/host_used")
-                manifest_extra["host_used"] = f"{it_dir}/host_used"
-            _write_manifest(state_dir, it, manifest_extra)
-
-        if cfg.host_budget is not None and not durable:
-            host_used = host_used.localCheckpoint(eager=True)
-        gated.unpersist()
-        fetched.unpersist()
-        wave_pre.unpersist()
-        if wave_probed is not None:
-            wave_probed.unpersist()
-        frontier, url_seen = next_frontier, new_seen
-
-        if durable:
+                manifest["seen_snapshot"] = merge_store.current_snapshot(seen_dir)
+            if host_used is not None:
+                manifest["host_used"] = f"{it_dir}/host_used"
+            _write_manifest(state_dir, it, manifest)
             _vacuum_snapshots(state_dir, cfg.keep_snapshots)
             if cfg.seen_store == "merge":
                 # the merge table advances every iteration, the manifest
@@ -1307,6 +1197,9 @@ def run_crawl(
                     seen_dir,
                     cfg.keep_snapshots * max(1, cfg.snapshot_every) + 1,
                 )
+        for df in cached:
+            df.unpersist()
+        frontier, url_seen = next_frontier, new_seen
 
         result.iterations.append(
             IterationStats(

@@ -75,7 +75,7 @@ def get_spark(
         b = b.config(k, v)
     fresh = SparkSession.getActiveSession() is None
     spark = b.getOrCreate()
-    if fresh and master.startswith("local"):
+    if fresh and (master == "local" or master.startswith("local[")):
         _prefork_python_workers(spark)
     return spark
 

@@ -298,8 +298,9 @@ def test_recrawl_cutoff_invalidates_and_refetches(spark, corpus, tmp_path):
     assert res_inval.iterations[0].fetched == n_seen
 
 
-def test_resume_equals_straight_run(spark, corpus, seeds, tmp_path):
-    cfgkw = dict(max_per_host=15, salt=1, filter_mode="none")
+@pytest.mark.parametrize("filter_mode", ["none", "bloom", "bloom_table", "cuckoo"])
+def test_resume_equals_straight_run(spark, corpus, seeds, tmp_path, filter_mode):
+    cfgkw = dict(max_per_host=15, salt=1, filter_mode=filter_mode, n_expected_urls=5000)
     sd_full = str(tmp_path / "full")
     run_crawl(spark, corpus, seeds, CrawlConfig(max_iterations=4, state_dir=sd_full, **cfgkw))
 
@@ -311,6 +312,72 @@ def test_resume_equals_straight_run(spark, corpus, seeds, tmp_path):
         resume=True,
     )
     assert _final_seen(spark, sd_full) == _final_seen(spark, sd_resume)
+
+
+def _manifest_seen(spark, state_dir):
+    """The final url_seen set through the manifest, for either seen store."""
+    from hepcrawl_spark.crawl.frontier import read_manifest
+    from hepcrawl_spark.sources import merge_store
+
+    m = read_manifest(state_dir)
+    if m["seen_store"] == "merge":
+        df = merge_store.read_table(spark, m["url_seen"])
+    else:
+        df = spark.read.parquet(m["url_seen"])
+    return {r["url"] for r in df.select("url").collect()}
+
+
+@pytest.mark.parametrize("seen_store", ["snapshot", "merge"])
+def test_rerun_into_used_state_dir_equals_fresh_run(spark, corpus, seeds, tmp_path, seen_store):
+    """A second non-resume run into a state_dir an earlier crawl used must
+    equal a run into a fresh dir. Without clearing, the earlier run's
+    newer iter_NNNN dirs outrank the new run's in the vacuum (snapshot
+    store: the live iter_0001 is deleted under a snapshot_every=2 run) and
+    its url_seen_merge table gates the new run (merge store). Entries the
+    crawl does not own stay."""
+    def cfg(sd):
+        return CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
+                           filter_mode="none", state_dir=sd, snapshot_every=2,
+                           seen_store=seen_store)
+
+    sd = tmp_path / "reused"
+    sd.mkdir()
+    (sd / "notes.txt").write_text("not crawl state")
+    run_crawl(spark, corpus, seeds, cfg(str(sd)))
+    again = run_crawl(spark, corpus, seeds, cfg(str(sd)))
+    fresh = run_crawl(spark, corpus, seeds, cfg(str(tmp_path / "fresh")))
+    assert _manifest_seen(spark, str(sd)) == _manifest_seen(spark, str(tmp_path / "fresh"))
+    assert [i.scheduled for i in again.iterations] == [i.scheduled for i in fresh.iterations]
+    assert (sd / "notes.txt").read_text() == "not crawl state"
+
+
+def test_commit_jobs_inherit_the_callers_job_group(spark, corpus, seeds, tmp_path):
+    """Every job a crawl launches — including the commit pool's concurrent
+    snapshot, filter, budget and records jobs — carries the caller's job
+    group, so a caller can attribute (or cancel) the whole crawl."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("crawl-under-test", "job group inheritance")
+    try:
+        run_crawl(
+            spark, corpus, seeds,
+            CrawlConfig(max_iterations=2, max_per_host=15, salt=1,
+                        filter_mode="bloom_table", state_dir=str(tmp_path / "jg"),
+                        n_expected_urls=5000, host_budget=1000),
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("crawl-under-test")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_unknown_filter_mode_is_rejected(spark, corpus, seeds, tmp_path):
+    with pytest.raises(ValueError, match="filter_mode"):
+        run_crawl(spark, corpus, seeds,
+                  CrawlConfig(filter_mode="blom", state_dir=str(tmp_path / "x")))
 
 
 def test_determinism_same_seeds_same_result(spark, corpus, seeds, tmp_path):

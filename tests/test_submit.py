@@ -1,5 +1,6 @@
 """spark-submit packaging: the zip imports standalone, the job CLI parses."""
 
+import os
 import subprocess
 
 import pytest
@@ -32,6 +33,16 @@ def test_zip_builds_and_imports(tmp_path):
     )
     assert r.returncode == 0, r.stderr
     assert r.stdout.strip() == "auto"
+
+
+def test_committed_zip_matches_a_fresh_build(tmp_path):
+    """dist/hepcrawl_spark.zip is committed: rebuild it with
+    ``python tools/make_submit.py`` whenever hepcrawl_spark/ changes."""
+    from tools.make_submit import ROOT, build_zip
+
+    fresh = build_zip(str(tmp_path / "fresh.zip"))
+    committed = os.path.join(ROOT, "dist", "hepcrawl_spark.zip")
+    assert open(fresh, "rb").read() == open(committed, "rb").read()
 
 
 def test_job_cli_parses():
