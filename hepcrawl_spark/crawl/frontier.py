@@ -40,9 +40,12 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..operators import textstats as X
 from ..operators.bloom import (
@@ -125,8 +128,9 @@ class CrawlConfig:
     state_dir: str | None = None     # snapshots + manifest for resume
     keep_snapshots: int = 2          # older ones are vacuumed
     detailed_stats: bool = False     # exact frontier/seen sizes per iteration
-                                     # (2 extra jobs/iteration; loop control
-                                     # only needs scheduled==0)
+                                     # (2 extra count jobs/iteration; the
+                                     # scheduled count is always exact, and
+                                     # loop control needs nothing more)
     link_meta: dict | None = None    # {key: Column over the fetched parent
                                      # row} merged into every outlink's
                                      # inherited meta map (reference
@@ -378,6 +382,21 @@ def _url_hashes(df: DataFrame) -> DataFrame:
     return df.select(F.xxhash64("url").alias("url_hash"))
 
 
+def _local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
+    """Driver-built ``rows`` (a list of tuples) as an Arrow-backed
+    LocalRelation. ``createDataFrame(list)`` would make a Python RDD, and
+    every scan of it would start a Python worker task; a LocalRelation is
+    scanned in the JVM, and its exact size lets Catalyst prune a join
+    against an empty one."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
 # --- membership filters ------------------------------------------------------
 # SHARDED filters (round 2): S independent shard bitmaps/tables. 10^10-URL
 # math: 1% fpp needs ~9.6e10 bits (~12 GB) total — a monolithic bitmap is
@@ -397,10 +416,13 @@ class SeenFilter:
     - ``probe(wave)``: the wave plus a boolean ``_maybe`` column, or None;
     - ``absorb(fetched, hashes)``: add one wave; the fused metrics pass
       collects ``hashes`` only for filters that set ``driver_delta``;
-    - ``persist(it_dir, durable)``: cut lineage, return manifest fields.
+    - ``persist(it_dir, durable)``: cut lineage, return manifest fields;
+    - ``release()``: destroy the wave's probe broadcast, called once the
+      wave's cached frames (the only plans that use it) are unpersisted.
     """
 
     driver_delta = False
+    _probe_udf = None  # the broadcast probe UDF of the live wave
 
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, state_dir: str):
         self.spark, self.cfg, self.state_dir = spark, cfg, state_dir
@@ -416,6 +438,13 @@ class SeenFilter:
 
     def persist(self, it_dir: str, durable: bool) -> dict:
         return {}
+
+    def release(self) -> None:
+        # otherwise every wave's copy of the filter stays broadcast (on the
+        # driver and each executor) for the rest of the session
+        if self._probe_udf is not None:
+            self._probe_udf.broadcast.destroy()
+            self._probe_udf = None
 
 
 class BloomSeenFilter(SeenFilter):
@@ -434,8 +463,8 @@ class BloomSeenFilter(SeenFilter):
             )
 
     def probe(self, wave):
-        probe = sharded_might_contain_udf(self.spark, self.bf)
-        return wave.withColumn("_maybe", probe(F.xxhash64("url")))
+        self._probe_udf = sharded_might_contain_udf(self.spark, self.bf)
+        return wave.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
 
     def absorb(self, fetched, hashes):
         self.bf.add(hashes)
@@ -525,8 +554,8 @@ class CuckooSeenFilter(SeenFilter):
             self.ccf = ShardedCuckoo.sized_for(n)
 
     def probe(self, wave):
-        probe = cuckoo_might_contain_udf(self.spark, self.ccf)
-        return wave.withColumn("_maybe", probe(F.xxhash64("url")))
+        self._probe_udf = cuckoo_might_contain_udf(self.spark, self.ccf)
+        return wave.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
 
     def absorb(self, fetched, hashes):
         # EVERY wave key gets its own fingerprint copy (multiset semantics).
@@ -546,9 +575,10 @@ class CuckooSeenFilter(SeenFilter):
         if not durable:
             return {}
         path = f"{it_dir}/cuckoo"
-        self.spark.createDataFrame(
-            [(s, nb, tb) for s, (nb, tb) in self.ccf.to_blobs().items()],
+        _local_frame(
+            self.spark,
             "shard int, n_buckets long, table binary",
+            [(s, nb, tb) for s, (nb, tb) in self.ccf.to_blobs().items()],
         ).coalesce(1).write.mode("overwrite").parquet(path)
         return {"cuckoo": path}
 
@@ -669,43 +699,36 @@ def _hot_host_salts(spark: SparkSession, frontier: DataFrame) -> DataFrame | Non
         .limit(MAX_HOT_HOSTS)
         .collect()
     ]
-    return spark.createDataFrame(rows, "host string, salt int") if rows else None
+    return _local_frame(spark, "host string, salt int", rows) if rows else None
+
+
+def _fetch(gated: DataFrame, corpus: DataFrame) -> tuple[int, DataFrame]:
+    """(scheduled, fetched): the fetch join (J5) of the cached ``gated``
+    wave against the corpus, persisted. The count materializes ``gated``
+    before the join is planned (persist plans it), so the planner sizes the
+    join from the wave's real size: a small wave is broadcast, never the
+    corpus."""
+    scheduled = gated.count()
+    return scheduled, gated.join(corpus, "url", "inner").persist()
 
 
 def _wave_metrics(fetched: DataFrame, with_hashes: bool):
-    """ONE pass over the fetched wave yields per-partition metrics AND, when
-    ``with_hashes``, the wave's url hashes for a driver-side filter delta —
-    instead of two separate jobs. The driver receives (partition_id, count,
-    hash-bytes) rows: 8 bytes per fetched url, never the filter size.
-    Returns ([(partition_id, n)], int64 hashes or None)."""
-    import pandas as pd
-    from pyspark import TaskContext
-
-    def per_partition(batches):
-        pid = TaskContext.get().partitionId()
-        chunks = []
-        n = 0
-        for pdf in batches:
-            if len(pdf):
-                n += len(pdf)
-                if with_hashes:
-                    chunks.append(pdf.iloc[:, 0].to_numpy(dtype=np.int64))
-        if n:
-            blob = np.concatenate(chunks).tobytes() if with_hashes else b""
-            yield pd.DataFrame({"partition_id": [pid], "n": [n], "hashes": [blob]})
-
-    rows = (
-        _url_hashes(fetched)
-        .mapInPandas(per_partition, "partition_id int, n long, hashes binary")
-        .collect()  # one row per partition
-    )
-    hashes = None
+    """ONE JVM-only pass over the fetched wave yields per-partition counts
+    AND, when ``with_hashes``, the wave's url hashes for a driver-side
+    filter delta. The driver receives an Arrow table of (partition_id,
+    hash) per fetched url, or of (partition_id, count) per partition —
+    never the filter, and no Python worker runs.
+    Returns ([(partition_id, n)] by partition, int64 hashes or None)."""
+    pid = F.spark_partition_id().alias("partition_id")
     if with_hashes:
-        hashes = np.concatenate(
-            [np.zeros(0, dtype=np.int64)]
-            + [np.frombuffer(r["hashes"], dtype=np.int64) for r in rows]
+        t = fetched.select(pid, F.xxhash64("url").alias("h")).toArrow()
+        pids, counts = np.unique(
+            np.asarray(t.column("partition_id"), dtype=np.int32), return_counts=True
         )
-    return [(r["partition_id"], r["n"]) for r in rows], hashes
+        hashes = np.asarray(t.column("h"), dtype=np.int64)
+        return list(zip(pids.tolist(), counts.tolist())), hashes
+    t = fetched.groupBy(pid).count().toArrow()  # one row per partition
+    return sorted(zip(t.column("partition_id").to_pylist(), t.column("count").to_pylist())), None
 
 
 def _rank_priorities(frontier: DataFrame, edges_path: str, iterations: int) -> DataFrame:
@@ -755,7 +778,7 @@ def _trap_templates(
         .select("host", "template")
         .collect()
     )
-    return spark.createDataFrame(rows, "host string, template string") if rows else None
+    return _local_frame(spark, "host string, template string", rows) if rows else None
 
 
 def _merge_seen(spark: SparkSession, seen_dir: str, wave_seen: DataFrame) -> DataFrame:
@@ -787,8 +810,29 @@ def run_crawl(
     Returns per-iteration stats; all state lives in config.state_dir when
     set (making the run checkpoint-resumable), else in a temp dir. A run
     with ``resume=False`` first removes an earlier crawl's state from it.
+
+    Every job the crawl launches carries a fixed job description naming
+    its stage ("crawl: setup", "crawl: wave", "crawl: metrics", "crawl:
+    commit frontier", ...); the caller's description is restored on return.
     """
-    cfg = config or CrawlConfig()
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    try:
+        return _run_crawl(spark, pages, seeds, config or CrawlConfig(), robots, resume)
+    finally:
+        sc.setLocalProperty("spark.job.description", caller_desc)
+
+
+def _run_crawl(
+    spark: SparkSession,
+    pages: DataFrame,
+    seeds: DataFrame,
+    cfg: CrawlConfig,
+    robots,
+    resume: bool,
+) -> CrawlResult:
+    sc = spark.sparkContext
+    sc.setJobDescription("crawl: setup")
     state_dir = cfg.state_dir or f"/tmp/hepcrawl_spark_state_{os.getpid()}_{id(seeds)}"
     seen_filter = _make_seen_filter(spark, cfg, state_dir)
     robots, robots_needs_rfc = _resolve_robots(pages, robots)
@@ -850,9 +894,9 @@ def run_crawl(
             ),
             *(["meta"] if "meta" in seeds.columns else []),
         ).withColumn("attempt", F.lit(0))
-        url_seen = spark.createDataFrame([], "url string, last_ts timestamp")
+        url_seen = _local_frame(spark, "url string, last_ts timestamp")
     if cfg.host_budget is not None and host_used is None:
-        host_used = spark.createDataFrame([], "host string, used long")
+        host_used = _local_frame(spark, "host string, used long")
     # meta threading (FRONTIER_SCHEMA): tolerate meta-less seeds and
     # pre-meta resume snapshots by adding an empty map
     if "meta" not in frontier.columns:
@@ -906,6 +950,7 @@ def run_crawl(
         # what later retires rows from the frontier — robots-disallowed URLs
         # must be removed too, or they are re-selected every iteration and
         # permanently starve allowed same-host URLs below the politeness cap.
+        sc.setJobDescription("crawl: salts")
         host_salts = (
             _hot_host_salts(spark, frontier) if cfg.salt_mode == "adaptive" else None
         )
@@ -952,30 +997,31 @@ def run_crawl(
             gated = crawl_once_gate(wave, url_seen)
         gated = gated.drop("_maybe", "warc_ts", "url_hash").persist()
 
-        # 4. fetch join (J5)
-        fetched = gated.join(corpus, "url", "inner").persist()
+        # 4. fetch join (J5); its count is the exact scheduled count
+        sc.setJobDescription("crawl: wave")
+        scheduled, fetched = _fetch(gated, corpus)
         cached = [df for df in (gated, fetched, wave_pre, wave_probed) if df is not None]
-
-        # one action yields per-partition metrics (A2/north rule), the fetched
-        # count, and the filter's delta hashes — fused into a single pass
-        part_metrics, hashes = _wave_metrics(fetched, seen_filter.driver_delta)
-        seen_filter.absorb(fetched, hashes)
-        fetched_n = sum(n for _, n in part_metrics)
-        # exact scheduled count costs one more plan+job per iteration; in
-        # fast mode approximate it by fetched (equal whenever every gated
-        # url exists in the corpus — always true for the synthetic graph)
-        scheduled = gated.count() if cfg.detailed_stats else fetched_n
         # nothing scheduled, but the wave may still be nonempty (all rows
-        # robots-blocked, already seen or failed): those rows are retired
-        # (or retried) by the state merge below like any other wave; only
-        # an empty wave terminates the crawl. The count runs on this rare
-        # path only.
+        # robots-blocked or already seen): those rows are retired by the
+        # state merge below like any other wave; only an empty wave
+        # terminates the crawl. The count runs on this rare path only.
         if scheduled == 0 and wave_pre.count() == 0:
             for df in cached:
                 df.unpersist()
+            seen_filter.release()
             break
+
+        # one action yields per-partition metrics (A2/north rule), the fetched
+        # count, and the filter's delta hashes — fused into a single pass
+        sc.setJobDescription("crawl: metrics")
+        part_metrics, hashes = _wave_metrics(fetched, seen_filter.driver_delta)
+        seen_filter.absorb(fetched, hashes)
+        fetched_n = sum(n for _, n in part_metrics)
+        # failed fetches: gated urls without a corpus row (a corpus holding
+        # several captures of one url joins it more than once, hence the floor)
+        errors = max(0, scheduled - fetched_n)
         metrics_rows.extend(
-            (it, pid, scheduled, n, n, 0) for pid, n in part_metrics
+            (it, pid, scheduled, n, n, errors) for pid, n in part_metrics
         )
 
         # 5. parse: per-page feature extraction (the HEPRecord-emission role;
@@ -988,16 +1034,17 @@ def run_crawl(
             X.record_features(
                 fetched, keep_cols=("url", "meta") if meta_live else ("url",)
             )
-            if scheduled
+            if fetched_n
             else None
         )
         links = extract_outlinks(
             fetched, link_meta=link_meta, thread_meta=meta_live
         )
-        if scheduled and cfg.rank_priorities_every > 0:
+        if fetched_n and cfg.rank_priorities_every > 0:
             # append this wave's (parent -> url) edges to the crawl's link
             # graph log; the periodic rank refresh reads it back. One narrow
             # write over the cached wave — no shuffle.
+            sc.setJobDescription("crawl: edges")
             links.select(
                 F.col("_parent").alias("src"), F.col("url").alias("dst")
             ).write.mode("append").parquet(f"{state_dir}/edges")
@@ -1066,17 +1113,18 @@ def run_crawl(
             next_frontier = next_frontier.unionByName(
                 retry.select(*frontier_cols)
             )
-        # the periodic refreshes skip a wave that scheduled nothing
+        # the periodic refreshes skip a wave that fetched nothing
         rank_due = (
-            scheduled
+            fetched_n
             and cfg.rank_priorities_every > 0
             and (it + 1) % cfg.rank_priorities_every == 0
         )
         if (
-            scheduled
+            fetched_n
             and cfg.trap_detect_every > 0
             and (it + 1) % cfg.trap_detect_every == 0
         ):
+            sc.setJobDescription("crawl: traps")
             trap_tpls = _trap_templates(
                 spark, new_seen, cfg.trap_min_urls, cfg.trap_min_share_ppm
             )
@@ -1137,25 +1185,32 @@ def run_crawl(
             return _cut(df, f"{it_dir}/frontier", durable)
 
         with ThreadPoolExecutor(max_workers=4) as pool:
-            def submit(fn, *args):
+            def submit(stage, fn, *args):
                 # wrapped per task: each gets its own copy of the caller's
-                # local properties (job group, description) and tags
-                return pool.submit(inheritable_thread_target(spark)(fn), *args)
+                # local properties (job group) and tags, then names its jobs
+                def task():
+                    sc.setJobDescription(f"crawl: {stage}")
+                    return fn(*args)
 
-            frontier_f = submit(frontier_commit)
+                return pool.submit(inheritable_thread_target(spark)(task))
+
+            frontier_f = submit("commit frontier", frontier_commit)
             seen_f = (
-                submit(_merge_seen, spark, seen_dir, wave_seen)
+                submit("commit url_seen", _merge_seen, spark, seen_dir, wave_seen)
                 if cfg.seen_store == "merge"
-                else submit(_cut, new_seen, f"{it_dir}/url_seen", durable)
+                else submit("commit url_seen", _cut, new_seen, f"{it_dir}/url_seen", durable)
             )
-            filter_f = submit(seen_filter.persist, it_dir, durable)
+            filter_f = submit("commit filter", seen_filter.persist, it_dir, durable)
             budget_f = (
-                submit(_cut, host_used, f"{it_dir}/host_used", durable)
+                submit("commit host_used", _cut, host_used, f"{it_dir}/host_used", durable)
                 if host_used is not None
                 else None
             )
             records_f = (
-                submit(records.write.mode("overwrite").parquet, f"{it_dir}/records")
+                submit(
+                    "records", records.write.mode("overwrite").parquet,
+                    f"{it_dir}/records",
+                )
                 if records is not None
                 else None
             )
@@ -1166,6 +1221,7 @@ def run_crawl(
             if records_f is not None:
                 records_f.result()
         if cfg.detailed_stats:
+            sc.setJobDescription("crawl: stats")
             new_frontier_size = next_frontier.count()
             seen_size = new_seen.count()
         else:
@@ -1199,6 +1255,7 @@ def run_crawl(
                 )
         for df in cached:
             df.unpersist()
+        seen_filter.release()
         frontier, url_seen = next_frontier, new_seen
 
         result.iterations.append(
@@ -1216,8 +1273,10 @@ def run_crawl(
             break
 
     if metrics_rows:
-        spark.createDataFrame(
-            metrics_rows,
+        sc.setJobDescription("crawl: metrics table")
+        _local_frame(
+            spark,
             "iteration int, partition_id int, scheduled long, fetched long, parsed long, errors long",
+            metrics_rows,
         ).write.mode("overwrite").parquet(f"{state_dir}/metrics")
     return result

@@ -238,7 +238,9 @@ def build_bloom_sharded(
 
 
 def sharded_might_contain_udf(spark: SparkSession, sb: ShardedBloom):
-    """Broadcast probe over the sharded filter (sandbox/small-filter path)."""
+    """Broadcast probe over the sharded filter (sandbox/small-filter path).
+    The UDF's ``broadcast`` attribute is the filter's broadcast: destroy it
+    once no query uses the UDF any more."""
     bcast = spark.sparkContext.broadcast((sb.to_blobs(), sb.n_shards))
 
     @pandas_udf(BooleanType())
@@ -247,6 +249,7 @@ def sharded_might_contain_udf(spark: SparkSession, sb: ShardedBloom):
         local = ShardedBloom.from_blobs(blobs, n_shards)
         return pd.Series(local.might_contain(hashes.to_numpy(dtype=np.int64)))
 
+    _might_contain.broadcast = bcast
     return _might_contain
 
 

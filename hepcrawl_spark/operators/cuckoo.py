@@ -317,6 +317,9 @@ def build_cuckoo(
 
 
 def cuckoo_might_contain_udf(spark: SparkSession, sc_filter: ShardedCuckoo):
+    """Broadcast probe over the sharded cuckoo filter. The UDF's
+    ``broadcast`` attribute is the filter's broadcast: destroy it once no
+    query uses the UDF any more."""
     bcast = spark.sparkContext.broadcast((sc_filter.to_blobs(), sc_filter.n_shards))
 
     @pandas_udf(BooleanType())
@@ -327,4 +330,5 @@ def cuckoo_might_contain_udf(spark: SparkSession, sc_filter: ShardedCuckoo):
             local.might_contain(hashes.to_numpy(dtype=np.int64).astype(np.uint64))
         )
 
+    _probe.broadcast = bcast
     return _probe

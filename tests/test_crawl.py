@@ -1017,3 +1017,174 @@ def test_recrawl_over_threshold_rebuilds_filter(spark, corpus, tmp_path):
         resume=True,
     )
     assert res.iterations[0].fetched == n_seen
+
+
+def test_scheduled_is_exact_and_errors_count_failed_fetches(spark, corpus, seeds, tmp_path):
+    """Fast mode (no detailed_stats): a gated url with no corpus row is
+    scheduled but not fetched, and the metrics table's errors column is the
+    iteration's failed fetches, repeated on each of its rows."""
+    seed_urls = sorted(r["url"] for r in seeds.collect())
+    # 3 seeds and a fifth of the other pages are missing
+    pages = corpus.filter(
+        ~F.col("url").isin(seed_urls[:3])
+        & (F.col("url").isin(seed_urls) | (F.col("page_id") % 5 != 2))
+    )
+    sd = str(tmp_path / "fails")
+    res = run_crawl(
+        spark, pages, seeds,
+        CrawlConfig(max_iterations=3, max_per_host=15, salt=1,
+                    filter_mode="bloom", state_dir=sd, n_expected_urls=5000),
+    )
+    it0 = res.iterations[0]
+    assert (it0.scheduled, it0.fetched) == (10, 7)
+    assert all(i.scheduled >= i.fetched for i in res.iterations)
+    assert sum(i.scheduled - i.fetched for i in res.iterations[1:]) > 0
+    errors = {
+        (r["iteration"], r["errors"])
+        for r in spark.read.parquet(f"{sd}/metrics").select("iteration", "errors").collect()
+    }
+    assert errors == {
+        (i.iteration, i.scheduled - i.fetched) for i in res.iterations
+    }
+
+
+def test_wave_metrics_counts_and_hashes_match_the_wave(spark, corpus):
+    """The JVM-side metrics pass: per-partition counts sum to the fetched
+    count, the hashes are xxhash64(url) of the fetched rows, and a filter
+    without a driver delta receives at most one row per partition."""
+    from hepcrawl_spark.crawl.frontier import _wave_metrics
+
+    fetched = corpus.filter(F.col("page_id") % 3 == 0).repartition(5, "host").persist()
+    try:
+        per_partition = sorted(
+            fetched.rdd.mapPartitionsWithIndex(
+                lambda i, rows: [(i, sum(1 for _ in rows))]
+            ).filter(lambda p: p[1] > 0).collect()
+        )
+        counts, hashes = _wave_metrics(fetched, with_hashes=True)
+        assert counts == per_partition
+        assert sum(n for _, n in counts) == fetched.count()
+        expected = sorted(
+            r[0] for r in fetched.select(F.xxhash64("url")).collect()
+        )
+        assert hashes.dtype == "int64" and sorted(hashes.tolist()) == expected
+
+        counts_only, no_hashes = _wave_metrics(fetched, with_hashes=False)
+        assert no_hashes is None
+        assert counts_only == per_partition
+        assert len(counts_only) <= fetched.rdd.getNumPartitions()
+    finally:
+        fetched.unpersist()
+
+
+def test_fetch_join_builds_on_the_wave_not_the_corpus(spark, corpus):
+    """A corpus under autoBroadcastJoinThreshold could be broadcast, but the
+    fetch join is planned after the wave's count, from its real size: the
+    join builds on the (smaller) wave side."""
+    from hepcrawl_spark.crawl.frontier import _fetch
+
+    # the cross join inflates the wave's size estimate 20x over the corpus's:
+    # planned from estimates, the join would broadcast the corpus
+    wave = (
+        corpus.crossJoin(spark.range(20).withColumnRenamed("id", "_k"))
+        .filter((F.col("_k") == 0) & (F.col("page_id") % 40 == 0))
+        .select("url", "host", F.lit(0.0).alias("priority"))
+        .persist()
+    )
+    scheduled, fetched = _fetch(wave, corpus.select("url", "warc_ts", "text"))
+    try:
+        assert scheduled == fetched.count() == 15
+        plan = fetched._jdf.queryExecution().executedPlan().toString()
+        # the initial plan and the final adaptive plan
+        joins = [line for line in plan.splitlines() if "Inner" in line]
+        assert len(joins) == 2, plan
+        assert all("BroadcastHashJoin" in j and "BuildLeft" in j for j in joins), joins
+    finally:
+        fetched.unpersist()
+        wave.unpersist()
+
+
+def test_local_frame_is_a_local_relation_pruned_when_empty(spark):
+    from hepcrawl_spark.crawl.frontier import _local_frame
+    from hepcrawl_spark.operators.dedup import crawl_once_gate
+
+    rows = [("a.org", 3), ("b.org", 5)]
+    salts = _local_frame(spark, "host string, salt int", rows)
+    assert salts._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    assert [tuple(r) for r in salts.collect()] == rows
+
+    empty_seen = _local_frame(spark, "url string, last_ts timestamp")
+    assert empty_seen._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    wave = spark.range(4).select(
+        F.col("id").cast("string").alias("url"),
+        F.current_timestamp().alias("warc_ts"),
+    )
+    gated = crawl_once_gate(wave, empty_seen)
+    assert "Join" not in gated._jdf.queryExecution().optimizedPlan().toString()
+    assert gated.count() == 4
+
+
+@pytest.mark.parametrize("filter_mode", ["bloom", "cuckoo"])
+def test_probe_broadcasts_are_released(spark, corpus, seeds, tmp_path, monkeypatch, filter_mode):
+    """Every wave's probe broadcasts the whole filter. Once the wave's
+    cached frames are unpersisted its broadcast is destroyed: a new one is
+    made only when all earlier ones are gone, and none outlives the crawl."""
+    from pyspark import SparkContext
+
+    made, live_when_made = [], []
+    real = SparkContext.broadcast
+
+    def broadcast(self, value):
+        live_when_made.append(sum(b._jbroadcast.isValid() for b in made))
+        made.append(real(self, value))
+        return made[-1]
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    res = run_crawl(
+        spark, corpus, seeds,
+        CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
+                    filter_mode=filter_mode, state_dir=str(tmp_path / "bc"),
+                    n_expected_urls=5000),
+    )
+    assert len(res.iterations) == 4
+    assert len(made) == 3  # waves 1-3 probe; wave 0 has nothing to probe
+    assert live_when_made == [0, 0, 0]
+    assert not any(b._jbroadcast.isValid() for b in made)
+
+
+# the fixed job descriptions run_crawl gives its stages
+CRAWL_STAGES = {
+    "crawl: setup", "crawl: salts", "crawl: wave", "crawl: metrics",
+    "crawl: edges", "crawl: traps", "crawl: commit frontier",
+    "crawl: commit url_seen", "crawl: commit filter", "crawl: commit host_used",
+    "crawl: records", "crawl: stats", "crawl: metrics table",
+}
+
+
+def test_every_crawl_job_is_named_by_its_stage(spark, corpus, seeds, tmp_path):
+    """Every job a crawl launches, the commit pool's included, carries one
+    of the fixed stage names as its job description (read back from the
+    status store); the caller's own description is restored afterwards."""
+    sc = spark.sparkContext
+    sc.setJobGroup("named-stages", "caller description")
+    try:
+        run_crawl(
+            spark, corpus, seeds,
+            CrawlConfig(max_iterations=3, max_per_host=15, salt=1,
+                        filter_mode="cuckoo", state_dir=str(tmp_path / "named"),
+                        n_expected_urls=5000, host_budget=1000,
+                        detailed_stats=True, rank_priorities_every=2,
+                        trap_detect_every=2, seen_store="merge"),
+            robots="auto",
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    store = sc._jsc.sc().statusStore()
+    names = []
+    for job_id in sc.statusTracker().getJobIdsForGroup("named-stages"):
+        desc = store.job(job_id).description()
+        names.append(desc.get() if desc.isDefined() else None)
+    assert set(names) == CRAWL_STAGES, set(names) ^ CRAWL_STAGES
