@@ -250,6 +250,19 @@ def _adc_scores(
 MAX_QUERY_ROWS = 1_000_000  # ~0.5 GB of float64 at dim 64 — driver-safe bound
 
 
+def collect_query_rows(queries: DataFrame) -> list:
+    """``queries.collect()``, refused above ``MAX_QUERY_ROWS`` rows."""
+    rows = queries.limit(MAX_QUERY_ROWS + 1).collect()
+    if len(rows) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"query side exceeds MAX_QUERY_ROWS={MAX_QUERY_ROWS}: the ANN "
+            "probe collects queries to the driver (queries << corpus "
+            "contract); route corpus-scale inputs through semantic_dedup / "
+            "embedding_neardup_pairs instead"
+        )
+    return rows
+
+
 def _collect_queries(
     queries: DataFrame, id_col: str, vec_col: str
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -260,16 +273,7 @@ def _collect_queries(
     silently OOM-ing the driver (round-5 verdict What's-wrong #2). For
     corpus-vs-corpus similarity use ``dedup.semantic_dedup`` /
     ``embedding_neardup_pairs``, which never collect vectors."""
-    rows = queries.select(F.col(id_col), _dbl(vec_col).alias("_v")).limit(
-        MAX_QUERY_ROWS + 1
-    ).collect()
-    if len(rows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"query side exceeds MAX_QUERY_ROWS={MAX_QUERY_ROWS}: the ANN "
-            "probe collects queries to the driver (queries << corpus "
-            "contract); route corpus-scale inputs through semantic_dedup / "
-            "embedding_neardup_pairs instead"
-        )
+    rows = collect_query_rows(queries.select(F.col(id_col), _dbl(vec_col).alias("_v")))
     return (
         np.array([r[id_col] for r in rows], dtype=np.int64),
         np.array([r["_v"] for r in rows], dtype=np.float64),

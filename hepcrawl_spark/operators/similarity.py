@@ -108,8 +108,9 @@ def cosine_topk(
     from pyspark.sql import types as T
 
     from ..session import spread
+    from .pq import collect_query_rows
 
-    qrows = queries.select(id_col, vec_col).collect()
+    qrows = collect_query_rows(queries.select(id_col, vec_col))
     id_type = corpus.schema[id_col].dataType
     out_schema = T.StructType(
         [

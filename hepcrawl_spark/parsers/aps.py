@@ -12,7 +12,6 @@ import json
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -23,6 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.text import strip_tags_keep_mathml_py
+from . import explode_records
 
 APS_AUTHOR = StructType(
     [
@@ -132,8 +132,4 @@ def parse_aps_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_aps_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_aps_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_aps_udf)

@@ -6,8 +6,9 @@ golden fixtures tests/unit/responses/arxiv/*.xml — implementation is
 stdlib ElementTree + re, no Scrapy/lxml.
 
 One OAI response body may hold many ``<record>`` elements
-(oaipmh_spider.py:215-232); the UDF returns ``array<struct>`` and callers
-``explode`` — the UDTF-like pattern from SURVEY.md §2.12.
+(oaipmh_spider.py:215-232); the UDF returns ``array<struct>`` and
+``parse_arxiv_pages`` makes it rows with ``explode_records`` — the UDTF-like
+pattern from SURVEY.md §2.12.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ from itertools import zip_longest
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType
 
@@ -31,6 +31,7 @@ from ..functions.text import (
     collapse_whitespace_py,
     split_fullname_py,
 )
+from . import explode_records
 
 
 def _make_full_name(surname: str, given: str) -> str:
@@ -277,8 +278,4 @@ def parse_arxiv_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 def parse_arxiv_pages(pages: DataFrame) -> DataFrame:
     """pages(url, html, ...) -> exploded records DataFrame."""
-    return (
-        pages.select(parse_arxiv_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_arxiv_udf)

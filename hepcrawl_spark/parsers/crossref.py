@@ -12,7 +12,6 @@ import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -23,6 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.text import collapse_initials_py, dot_single_initials_py
+from . import explode_records
 
 # public crossref type taxonomy -> inspire document types
 DOC_TYPE_MAP = {
@@ -171,8 +171,4 @@ def parse_crossref_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_crossref_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_crossref_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_crossref_udf)

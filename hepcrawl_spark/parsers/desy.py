@@ -14,7 +14,6 @@ import json
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -22,6 +21,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import explode_records
 
 DESY_RECORD = StructType(
     [
@@ -87,8 +88,4 @@ def parse_desy_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_desy_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_desy_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_desy_udf)

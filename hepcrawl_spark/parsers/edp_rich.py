@@ -13,7 +13,6 @@ import xml.etree.ElementTree as ET
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -22,6 +21,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import explode_records
 
 EDP_AUTHOR = StructType(
     [
@@ -172,8 +173,4 @@ def parse_edp_rich_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_edp_rich_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_edp_rich_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_edp_rich_udf)

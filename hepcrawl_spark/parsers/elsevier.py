@@ -18,7 +18,6 @@ import xml.etree.ElementTree as ET
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -29,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.text import dot_single_initials_py
+from . import explode_records
 from .jats import _MONTH_NAMES, PartialDate, _strip_ns, remove_tags
 
 DOCTYPE_MAPPING = {
@@ -469,8 +469,4 @@ def parse_elsevier_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_elsevier_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_elsevier_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_elsevier_udf)

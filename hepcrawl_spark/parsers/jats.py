@@ -20,7 +20,6 @@ from copy import deepcopy
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -31,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.text import coll_cleanforthe_py, collapse_initials_py
+from . import explode_records
 
 JATS_AUTHOR = StructType(
     [
@@ -619,11 +619,7 @@ def parse_jats_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_jats_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_jats_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_jats_udf)
 
 
 _JATS_REF_ROW = StructType(
@@ -664,8 +660,4 @@ def parse_jats_references_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_jats_references_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_jats_references_udf("url", "html").alias("refs"))
-        .select(F.explode("refs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_jats_references_udf)

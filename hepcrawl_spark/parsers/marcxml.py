@@ -19,7 +19,6 @@ import xml.etree.ElementTree as ET
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -30,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.text import split_fullname_py
+from . import explode_records
 
 MARC_AUTHOR = StructType(
     [
@@ -210,8 +210,4 @@ def parse_marcxml_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_marcxml_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_marcxml_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_marcxml_udf)

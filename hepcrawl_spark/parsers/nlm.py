@@ -12,7 +12,6 @@ import xml.etree.ElementTree as ET
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -23,6 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.text import collapse_whitespace_py
+from . import explode_records
 
 NLM_AUTHOR = StructType(
     [
@@ -181,8 +181,4 @@ def parse_nlm_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_nlm_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_nlm_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_nlm_udf)

@@ -17,7 +17,6 @@ import xml.etree.ElementTree as ET
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -28,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.text import collapse_initials_py, split_fullname_py
+from . import explode_records
 
 POS_AUTHOR = StructType(
     [
@@ -145,8 +145,4 @@ def parse_pos_udf(urls: pd.Series, bodies: pd.Series) -> pd.Series:
 
 
 def parse_pos_pages(pages: DataFrame) -> DataFrame:
-    return (
-        pages.select(parse_pos_udf("url", "html").alias("recs"))
-        .select(F.explode("recs").alias("r"))
-        .select("r.*")
-    )
+    return explode_records(pages, parse_pos_udf)

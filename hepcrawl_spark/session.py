@@ -23,6 +23,10 @@ deployment and merely *also* work on local[32]):
   task run in parallel; ``importlib.invalidate_caches()`` alone, with that
   path, takes 40-58 ms per call. Driver-built tables therefore go through
   Arrow-backed ``LocalRelation``s (``crawl/frontier._local_frame``).
+  A Python UDF's result may feed a generator or a filter only inside the
+  same ``select``: across an alias, Catalyst pushes the filter (written,
+  or inferred from the generator) below the alias and evaluates the UDF
+  a second time for it (``parsers.explode_records``).
 - shuffle.partitions default 32 locally; on a real cluster set it to
   ~2-3x total cores via spark-submit --conf, or rely on AQE coalescing
   from a higher initial value.

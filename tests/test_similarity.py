@@ -146,3 +146,14 @@ def test_ivf_index_roundtrips_through_parquet(spark, tmp_path):
     # cell-partitioned layout on disk (partition pruning at probe time)
     assert any(d.startswith("cell=") for d in os.listdir(f"{idx}/cells"))
     emb.unpersist()
+
+
+def test_cosine_topk_query_collect_is_bounded(spark, emb, monkeypatch):
+    """The exact top-k ships its query side to every task, so it refuses a
+    query side above MAX_QUERY_ROWS, as the ANN probes do."""
+    from hepcrawl_spark.operators import pq as PQ
+
+    monkeypatch.setattr(PQ, "MAX_QUERY_ROWS", 5)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS"):
+        SIM.cosine_topk(emb, emb.filter("vec_id < 6"), k=5)
+    assert SIM.cosine_topk(emb, emb.filter("vec_id < 5"), k=5).count() == 25

@@ -26,13 +26,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     import bench
 
-    real = os.getpid()
+    getpid = os.getpid
+    real = getpid()
     print("=== RUN1 (cold) ===", flush=True)
     bench.main()
-    # second pass: same session (get_spark getOrCreate), fresh state dir
+    # second pass: same session (get_spark getOrCreate), fresh state dir.
+    # bench.os is the process-wide os module, so put getpid back after.
     bench.os.getpid = lambda: real + 1_000_000
-    print("=== RUN2 (warm) ===", flush=True)
-    bench.main()
+    try:
+        print("=== RUN2 (warm) ===", flush=True)
+        bench.main()
+    finally:
+        bench.os.getpid = getpid
 
 
 if __name__ == "__main__":
