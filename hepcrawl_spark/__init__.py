@@ -13,7 +13,7 @@ Layout:
   functions/  scalar column functions (urls, text, hashing, latex, shaping)
   operators/  dedup (exact/sharded-bloom/cuckoo/minhash/simhash/jaccard),
               politeness, filters (harvest gates), records (document
-              back-join), similarity search, text analysis, multimodal
+              back-join), similarity search, text analysis
   sources/    page-corpus synthesis, snapshotted parquet table store,
               archives (zip/tar member scans)
   parsers/    per-format vectorized parse UDFs (arxiv OAI, JATS/WSP/APS/EDP,

@@ -7,8 +7,8 @@ Catalyst query:
 
   1. politeness wave select   (P1/P2/P4: salted per-host window cap)
   2. robots gate              (P5: broadcast rules anti-join)
-  3. crawl-once gate          (D1: SeenFilter prefilter — none, bloom,
-                               bloom_table or cuckoo — + exact anti-join)
+  3. seen-filtered link admission (D1: the one URL-seen test; SeenFilter
+                               prefilter — none, bloom, bloom_table or cuckoo)
   4. fetch                    (J5: equi-join wave vs pages on url)
   5. parse + outlink explode  (F5/UDTF: regexp link extraction, JVM-side)
   6. state merge              (frontier', url_seen', metrics)
@@ -34,10 +34,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 import time
 import warnings
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 import pyarrow as pa
@@ -79,26 +80,16 @@ class CrawlConfig:
     salt: int = 4                    # hot-host salting factor (salt_mode=
                                      # 'static': uniform for every host;
                                      # 'adaptive': the base for cold hosts)
-    salt_mode: str = "adaptive"      # DEFAULT since round 5: per-host salt
-                                     # factors recomputed from the live
-                                     # frontier's skew (adaptive_host_salt:
-                                     # hot host shards ~ pending count /
-                                     # (8 x median), at most 256) —
-                                     # SURVEY §7(e), the
-                                     # arxiv.org hotspot. The round-5 cost
-                                     # story (BENCH/BASELINE.md): leaving
-                                     # the pressure aggregation as a
-                                     # subplan re-executed it inside every
-                                     # job touching the wave (-25% at the
-                                     # 2.4M-page corpus, pinned A/B); the
-                                     # loop now COLLECTS the tiny hot-host
-                                     # set once per wave and joins a
-                                     # literal — re-measured par with
-                                     # static at 2.4M (44.4k vs 44.2k
-                                     # URLs/s), +12% steady on the skewed
-                                     # bench corpus, and literally zero
-                                     # extra work when no host is hot.
-                                     # 'static' restores uniform salting.
+    salt_mode: str = "adaptive"      # per-host salt factors recomputed
+                                     # each wave from the live frontier's
+                                     # skew (adaptive_host_salt: hot host
+                                     # shards ~ pending count / (8 x
+                                     # median), at most 256) — SURVEY §7(e),
+                                     # the arxiv.org hotspot; measured par
+                                     # with static at 2.4M pages, +12% on
+                                     # the skewed bench corpus
+                                     # (BENCH/BASELINE.md). 'static':
+                                     # uniform salting.
     filter_mode: str = "auto"        # 'auto' (the DEFAULT: bloom under
                                      # auto_filter_threshold expected urls,
                                      # bloom_table above — a deployment
@@ -158,12 +149,7 @@ class CrawlConfig:
                                      # and drop frontier rows whose
                                      # (host, template) is flagged — the
                                      # calendar/session-id trap guard an
-                                     # open-web frontier needs. The flagged
-                                     # set is collected to a LITERAL
-                                     # broadcast (tiny, bounded) so the
-                                     # per-iteration gate join never
-                                     # re-executes the detection subplan
-                                     # (the adaptive-salt lesson). Not
+                                     # open-web frontier needs. Not
                                      # persisted: resume recomputes at the
                                      # next refresh from url_seen, which IS
                                      # durable. 0 = off (historical).
@@ -406,23 +392,23 @@ def _local_frame(spark: SparkSession, schema: str, rows=()) -> DataFrame:
 
 
 class SeenFilter:
-    """Membership prefilter in front of the crawl-once gate's exact
-    url_seen anti-join, one per run_crawl call. This base class is
-    filter_mode 'none'; each subclass owns one mode's state through:
+    """The crawl's URL-seen test, ``unseen(links, url_seen, probe)``, run at
+    link admission; one per run_crawl call. This base class is filter_mode
+    'none', the exact anti-join alone. Each subclass prefilters it with one
+    membership filter: ``_maybe(links)`` adds a boolean ``_maybe`` column,
+    False only for a url the filter never absorbed. It owns the filter's
+    state through:
 
     - ``restore(manifest, url_seen, invalidated, n_invalidated, seen_size)``:
       an empty filter when ``manifest`` is None, else restored or rebuilt;
       ``url_seen`` already lacks the recrawl sweep's ``invalidated`` hashes;
-    - ``probe(wave)``: the wave plus a boolean ``_maybe`` column, or None;
     - ``absorb(fetched, hashes)``: add one wave; the fused metrics pass
       collects ``hashes`` only for filters that set ``driver_delta``;
-    - ``persist(it_dir, durable)``: cut lineage, return manifest fields;
-    - ``release()``: destroy the wave's probe broadcast, called once the
-      wave's cached frames (the only plans that use it) are unpersisted.
+    - ``persist(it_dir, durable)``: cut lineage, return manifest fields.
     """
 
     driver_delta = False
-    _probe_udf = None  # the broadcast probe UDF of the live wave
+    _probed = _probe_udf = None  # the iteration's probed links, probe UDF
 
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, state_dir: str):
         self.spark, self.cfg, self.state_dir = spark, cfg, state_dir
@@ -430,7 +416,19 @@ class SeenFilter:
     def restore(self, manifest, url_seen, invalidated, n_invalidated, seen_size):
         pass
 
-    def probe(self, wave: DataFrame) -> DataFrame | None:
+    def unseen(self, links: DataFrame, url_seen: DataFrame, probe: bool) -> DataFrame:
+        """``links`` ⋉̸ ``url_seen``; with ``probe``, links the filter never
+        absorbed skip the anti-join. The probed links are persisted (one
+        probe for both branches) until ``release()``."""
+        probed = self._maybe(links) if probe else None
+        if probed is None:
+            return links.join(url_seen.select("url"), "url", "left_anti")
+        self._probed = probed = probed.persist()
+        return probed.filter("NOT _maybe").unionByName(
+            probed.filter("_maybe").join(url_seen.select("url"), "url", "left_anti")
+        ).drop("_maybe")
+
+    def _maybe(self, links: DataFrame) -> DataFrame | None:
         return None
 
     def absorb(self, fetched: DataFrame, hashes) -> None:
@@ -440,8 +438,11 @@ class SeenFilter:
         return {}
 
     def release(self) -> None:
-        # otherwise every wave's copy of the filter stays broadcast (on the
-        # driver and each executor) for the rest of the session
+        # otherwise every iteration's copy of the filter stays broadcast
+        # (on the driver and each executor) for the rest of the session
+        if self._probed is not None:
+            self._probed.unpersist()
+            self._probed = None
         if self._probe_udf is not None:
             self._probe_udf.broadcast.destroy()
             self._probe_udf = None
@@ -462,9 +463,9 @@ class BloomSeenFilter(SeenFilter):
                 _url_hashes(url_seen), n_items=n, n_shards=shards
             )
 
-    def probe(self, wave):
+    def _maybe(self, links):
         self._probe_udf = sharded_might_contain_udf(self.spark, self.bf)
-        return wave.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
+        return links.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
 
     def absorb(self, fetched, hashes):
         self.bf.add(hashes)
@@ -489,12 +490,12 @@ class BloomTableSeenFilter(SeenFilter):
             )
         self.table = _snapshot(table, f"{self.state_dir}/bloom_init")
 
-    def probe(self, wave):
+    def _maybe(self, links):
         return bloom_probe_cogroup(
-            wave.withColumn("url_hash", F.xxhash64("url")),
+            links.withColumn("url_hash", F.xxhash64("url")),
             self.table,
             n_shards=self.cfg.bloom_shards,
-        )
+        ).drop("url_hash")
 
     def absorb(self, fetched, hashes):
         # OR the wave's hashes into the shard bitmaps: a cogroup, planned
@@ -553,9 +554,9 @@ class CuckooSeenFilter(SeenFilter):
         else:
             self.ccf = ShardedCuckoo.sized_for(n)
 
-    def probe(self, wave):
+    def _maybe(self, links):
         self._probe_udf = cuckoo_might_contain_udf(self.spark, self.ccf)
-        return wave.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
+        return links.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
 
     def absorb(self, fetched, hashes):
         # EVERY wave key gets its own fingerprint copy (multiset semantics).
@@ -594,10 +595,8 @@ _SEEN_FILTERS = {
 def _make_seen_filter(
     spark: SparkSession, cfg: CrawlConfig, state_dir: str
 ) -> SeenFilter:
-    """``cfg.filter_mode`` -> its SeenFilter, resolving 'auto'."""
-    # above auto_filter_threshold expected urls the broadcast bloom's driver
-    # costs (full shard dict resident and re-broadcast, 8 B/url/wave of
-    # hashes collected) stop being trivial
+    """``cfg.filter_mode`` -> its SeenFilter, resolving 'auto' (see
+    ``CrawlConfig.auto_filter_threshold``)."""
     mode = cfg.filter_mode
     if mode == "auto":
         mode = (
@@ -808,8 +807,9 @@ def run_crawl(
     fetch-and-obey flow: a real crawl fetches robots.txt like any page;
     here those bodies already sit in the corpus snapshot).
     Returns per-iteration stats; all state lives in config.state_dir when
-    set (making the run checkpoint-resumable), else in a temp dir. A run
-    with ``resume=False`` first removes an earlier crawl's state from it.
+    set (making the run checkpoint-resumable), else in a temporary directory
+    removed on return. A run with ``resume=False`` first removes an earlier
+    crawl's state from ``state_dir``.
 
     Every job the crawl launches carries a fixed job description naming
     its stage ("crawl: setup", "crawl: wave", "crawl: metrics", "crawl:
@@ -817,8 +817,12 @@ def run_crawl(
     """
     sc = spark.sparkContext
     caller_desc = sc.getLocalProperty("spark.job.description")
+    cfg = config or CrawlConfig()
     try:
-        return _run_crawl(spark, pages, seeds, config or CrawlConfig(), robots, resume)
+        # tmp holds the state only when the caller names no state_dir
+        with tempfile.TemporaryDirectory(prefix="hepcrawl_spark_state_") as tmp:
+            cfg = replace(cfg, state_dir=cfg.state_dir or tmp)
+            return _run_crawl(spark, pages, seeds, cfg, robots, resume)
     finally:
         sc.setLocalProperty("spark.job.description", caller_desc)
 
@@ -833,7 +837,7 @@ def _run_crawl(
 ) -> CrawlResult:
     sc = spark.sparkContext
     sc.setJobDescription("crawl: setup")
-    state_dir = cfg.state_dir or f"/tmp/hepcrawl_spark_state_{os.getpid()}_{id(seeds)}"
+    state_dir = cfg.state_dir
     seen_filter = _make_seen_filter(spark, cfg, state_dir)
     robots, robots_needs_rfc = _resolve_robots(pages, robots)
     os.makedirs(state_dir, exist_ok=True)
@@ -918,8 +922,7 @@ def _run_crawl(
     # it can delete (cuckoo). The driver sees ONE scalar here (the
     # invalidated count); only the filter may collect the hash list, and
     # only under `auto_filter_threshold` — a coarse cutoff over a
-    # 10^10-URL seen set invalidates billions of rows (round-5 verdict
-    # What's-wrong #1).
+    # 10^10-URL seen set invalidates billions of rows.
     invalidated = None
     n_invalidated = 0
     if cfg.recrawl_cutoff is not None and m is not None:
@@ -938,6 +941,10 @@ def _run_crawl(
             url_seen = merge_store.read_table(spark, seen_dir)
         seen_size = max(0, seen_size - n_invalidated)
     seen_filter.restore(m, url_seen, invalidated, n_invalidated, seen_size)
+    if m is not None:
+        # admission keeps seen urls out of the frontier; only a state built
+        # outside the loop can hold one, so gate the restored frontier once
+        frontier = crawl_once_gate(frontier, url_seen, new_ts_col="discovered_ts")
 
     result = CrawlResult()
     metrics_rows = []
@@ -978,37 +985,22 @@ def _run_crawl(
         # 'Disallow: / + Allow: /public/' robots.txt must NOT black-hole
         # the whole host); the cheaper prefix anti-join covers the
         # disallow-only common case. Both gates are broadcast-side only.
-        wave = wave_pre
+        gated = wave_pre
         if robots is not None:
-            wave = (robots_gate_rfc if robots_needs_rfc else robots_gate)(wave_pre, robots)
-
-        # 3. crawl-once gate behind the seen filter's probe (nothing to
-        # probe before the first wave of a fresh run). The probed wave is
-        # persisted: the gate's fresh/maybe split reads it twice, and
-        # without the cache the politeness window (a shuffle) would run twice.
-        wave = wave.withColumn("warc_ts", F.col("discovered_ts"))
-        wave_probed = seen_filter.probe(wave) if it > 0 else None
-        if wave_probed is not None:
-            wave_probed = wave_probed.persist()
-            gated = crawl_once_gate(
-                wave_probed, url_seen, might_be_seen=F.col("_maybe")
-            )
-        else:
-            gated = crawl_once_gate(wave, url_seen)
-        gated = gated.drop("_maybe", "warc_ts", "url_hash").persist()
+            gated = (robots_gate_rfc if robots_needs_rfc else robots_gate)(wave_pre, robots)
+        gated = gated.persist()  # holds no seen url: see link admission (3.)
 
         # 4. fetch join (J5); its count is the exact scheduled count
         sc.setJobDescription("crawl: wave")
         scheduled, fetched = _fetch(gated, corpus)
-        cached = [df for df in (gated, fetched, wave_pre, wave_probed) if df is not None]
+        cached = [gated, fetched, wave_pre]
         # nothing scheduled, but the wave may still be nonempty (all rows
-        # robots-blocked or already seen): those rows are retired by the
-        # state merge below like any other wave; only an empty wave
-        # terminates the crawl. The count runs on this rare path only.
+        # robots-blocked): those rows are retired by the state merge below
+        # like any other wave; only an empty wave terminates the crawl. The
+        # count runs on this rare path only.
         if scheduled == 0 and wave_pre.count() == 0:
             for df in cached:
                 df.unpersist()
-            seen_filter.release()
             break
 
         # one action yields per-partition metrics (A2/north rule), the fetched
@@ -1060,15 +1052,6 @@ def _run_crawl(
             if meta_live
             else []
         )
-        new_frontier_rows = (
-            links.groupBy("url", "host")
-            .agg(F.min("discovered_ts").alias("discovered_ts"), *meta_agg)
-            .withColumn("priority", F.lit(0.0))
-            .withColumn("attempt", F.lit(0))
-        )
-        if not meta_live:
-            new_frontier_rows = new_frontier_rows.withColumn("meta", F.expr(_EMPTY_META))
-
         # 6. state merge
         wave_seen = fetched.select("url", F.col("warc_ts").alias("last_ts"))
         new_seen = (
@@ -1081,9 +1064,24 @@ def _run_crawl(
         # middleware drops denied requests permanently). wave_pre is cached,
         # so this re-read costs no politeness-window shuffle.
         remaining = frontier.join(wave_pre.select("url"), "url", "left_anti")
-        candidates = new_frontier_rows.join(new_seen, "url", "left_anti").join(
+        # 3. link admission: links ⋉̸ wave_seen ⋉̸ remaining ⋉̸ url_seen, the
+        # last behind the seen filter. Probing the raw links puts the
+        # filter's union under the groupBy's shuffle (no extra frontier
+        # part-files), and on the main thread, before persist() replaces the
+        # filter state in the commit pool. A fresh run's first wave has
+        # nothing to probe.
+        links = links.join(wave_seen.select("url"), "url", "left_anti").join(
             remaining.select("url"), "url", "left_anti"
         )
+        candidates = (
+            seen_filter.unseen(links, url_seen, probe=it > 0)
+            .groupBy("url", "host")
+            .agg(F.min("discovered_ts").alias("discovered_ts"), *meta_agg)
+            .withColumn("priority", F.lit(0.0))
+            .withColumn("attempt", F.lit(0))
+        )
+        if not meta_live:
+            candidates = candidates.withColumn("meta", F.expr(_EMPTY_META))
         if cfg.max_depth is not None:
             candidates = candidates.filter(depth <= cfg.max_depth)
         frontier_cols = [

@@ -7,10 +7,11 @@ new one; i.e. KEEP iff unseen OR new_ts > last_ts.
 
 Scale shape of the gate:
   frontier (huge, this wave's slice)  LEFT JOIN  url_seen (huge)
-  -> shuffle on url (or url_hash). The bloom/cuckoo prefilter
-  (operators/bloom.py / cuckoo.py) removes definitely-unseen rows before the
-  shuffle; at 10^10 URLs with mostly-fresh frontiers that's the difference
-  between shuffling everything and shuffling a few percent.
+  -> shuffle on url (or url_hash). The gate's bloom/cuckoo prefilter
+  (operators/bloom.py / cuckoo.py) is one more join condition. The crawl
+  loop runs its URL-seen test at link admission instead, where the volume
+  is (crawl/frontier.py SeenFilter.unseen): there the definitely-unseen
+  links skip the exact anti-join and its shuffle.
 
 All text dedup operators use only portable primitives (md5-derived hashes,
 split/explode/groupBy) so the DuckDB oracle can reproduce them bit-for-bit.
@@ -36,23 +37,19 @@ def crawl_once_gate(
 ) -> DataFrame:
     """Keep frontier rows that must be crawled (unseen, or newer capture).
 
-    ``might_be_seen``: optional boolean column (bloom/cuckoo probe). Rows
-    where it is False bypass the join entirely; only maybe-seen rows shuffle.
+    ``might_be_seen``: optional boolean column (bloom/cuckoo probe). It is
+    one more join condition, so the plan reads it once: a row where it is
+    False matches no url_seen row and passes the gate, as an unseen url
+    does. Every row still takes the join.
     """
     seen = url_seen.select(
         F.col("url").alias("_seen_url"), F.col("last_ts").alias("_last_ts")
     )
+    on = frontier["url"] == seen["_seen_url"]
     if might_be_seen is not None:
-        fresh = frontier.filter(~might_be_seen)
-        maybe = frontier.filter(might_be_seen)
-        checked = (
-            maybe.join(seen, maybe["url"] == seen["_seen_url"], "left")
-            .filter(F.col("_seen_url").isNull() | (F.col(new_ts_col) > F.col("_last_ts")))
-            .drop("_seen_url", "_last_ts")
-        )
-        return fresh.unionByName(checked)
+        on = on & might_be_seen
     return (
-        frontier.join(seen, frontier["url"] == seen["_seen_url"], "left")
+        frontier.join(seen, on, "left")
         .filter(F.col("_seen_url").isNull() | (F.col(new_ts_col) > F.col("_last_ts")))
         .drop("_seen_url", "_last_ts")
     )

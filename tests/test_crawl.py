@@ -7,7 +7,9 @@ url_seen set and identical per-iteration schedule, regardless of which
 membership filter accelerates the gate and regardless of checkpoint/resume.
 """
 
+import os
 import shutil
+import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -298,6 +300,96 @@ def test_recrawl_cutoff_invalidates_and_refetches(spark, corpus, tmp_path):
     assert res_inval.iterations[0].fetched == n_seen
 
 
+def test_newer_rediscovery_of_a_seen_url_is_not_readmitted(spark, tmp_path):
+    """Link admission drops every link to a seen url, whatever its
+    timestamp: the reference's newer-capture rule (middlewares.py:134-155)
+    applies only as the periodic recrawl_cutoff sweep of url_seen, after
+    which the url is admitted again when a link rediscovers it."""
+    a, b, c = (f"https://{h}.example.org/p" for h in "abc")
+    pages = spark.createDataFrame(
+        [
+            (a, f'<a href="{b}">b</a>', "2024-01-01 00:00:00"),
+            (b, f'<a href="{a}">a</a> <a href="{c}">c</a>', "2024-01-02 00:00:00"),
+            (c, f'<a href="{a}">a</a>', "2024-01-03 00:00:00"),
+        ],
+        "url string, text string, ts string",
+    ).select(
+        "url", "text", F.to_timestamp("ts").alias("warc_ts"),
+        F.encode("text", "UTF-8").alias("html"), F.lit("en").alias("lang"),
+    )
+    seeds1 = pages.filter(F.col("url") == a).select(
+        "url", F.lit("a.example.org").alias("host"), F.lit(1.0).alias("priority"),
+        F.col("warc_ts").alias("discovered_ts"),
+    )
+
+    def crawl(sd, max_iterations, resume=False, recrawl_cutoff=None):
+        return run_crawl(
+            spark, pages, seeds1,
+            CrawlConfig(max_iterations=max_iterations, max_per_host=10, salt=1,
+                        filter_mode="bloom", n_expected_urls=100,
+                        state_dir=str(tmp_path / sd), recrawl_cutoff=recrawl_cutoff),
+            resume=resume,
+        )
+
+    for sd in ("kept", "swept"):
+        crawl(sd, 2)  # fetches a, then b, whose link to a is newer than a's capture
+        frontier = spark.read.parquet(str(tmp_path / sd / "iter_0001" / "frontier"))
+        assert [r["url"] for r in frontier.collect()] == [c]
+    # c's link to a is dropped, and the frontier runs dry
+    assert [i.fetched for i in crawl("kept", 4, resume=True).iterations] == [1]
+    # the sweep removes a's entry, so c's link admits it and a is fetched again
+    swept = crawl("swept", 4, resume=True, recrawl_cutoff="2024-01-01 12:00:00")
+    assert [i.fetched for i in swept.iterations] == [1, 1]
+
+
+@pytest.mark.parametrize("seen_store", ["snapshot", "merge"])
+@pytest.mark.parametrize("filter_mode", ["none", "bloom", "bloom_table", "cuckoo"])
+def test_frontier_never_holds_a_seen_url(
+    spark, corpus, seeds, tmp_path, monkeypatch, filter_mode, seen_store
+):
+    """Link admission is the crawl's only URL-seen test, so the wave needs
+    no gate: after every durable iteration, retries and a resumed run
+    included, the frontier and the url_seen its manifest names share no
+    url."""
+    from hepcrawl_spark.crawl import frontier as fr
+    from hepcrawl_spark.sources import merge_store
+
+    checks = []  # (frontier rows, of them in url_seen) per durable commit
+    real = fr._write_manifest
+
+    def write_manifest(state_dir, iteration, extra=None):
+        real(state_dir, iteration, extra)
+        m = fr.read_manifest(state_dir)
+        seen = (
+            merge_store.read_table(spark, m["url_seen"], m["seen_snapshot"])
+            if m["seen_store"] == "merge"
+            else spark.read.parquet(m["url_seen"])
+        )
+        row = (
+            spark.read.parquet(m["frontier"])
+            .join(seen.select("url", F.lit(1).alias("seen")), "url", "left")
+            .agg(F.count("*"), F.count("seen"))
+            .first()
+        )
+        checks.append(tuple(row))
+
+    monkeypatch.setattr(fr, "_write_manifest", write_manifest)
+    ghost = spark.createDataFrame(
+        [("https://ghost.example.org/nope", "ghost.example.org", 8.0)],
+        "url string, host string, priority double",
+    ).withColumn("discovered_ts", F.current_timestamp())
+    cfgkw = dict(max_per_host=15, salt=1, filter_mode=filter_mode,
+                 seen_store=seen_store, n_expected_urls=5000, max_attempts=2)
+    sd = str(tmp_path / "inv")
+    run_crawl(spark, corpus, seeds.unionByName(ghost),
+              CrawlConfig(max_iterations=2, state_dir=sd, **cfgkw))
+    run_crawl(spark, corpus, seeds.unionByName(ghost),
+              CrawlConfig(max_iterations=3, state_dir=sd, **cfgkw), resume=True)
+    assert len(checks) == 3
+    assert all(n > 0 for n, _ in checks), checks
+    assert [overlap for _, overlap in checks] == [0, 0, 0]
+
+
 @pytest.mark.parametrize("filter_mode", ["none", "bloom", "bloom_table", "cuckoo"])
 def test_resume_equals_straight_run(spark, corpus, seeds, tmp_path, filter_mode):
     cfgkw = dict(max_per_host=15, salt=1, filter_mode=filter_mode, n_expected_urls=5000)
@@ -378,6 +470,18 @@ def test_unknown_filter_mode_is_rejected(spark, corpus, seeds, tmp_path):
     with pytest.raises(ValueError, match="filter_mode"):
         run_crawl(spark, corpus, seeds,
                   CrawlConfig(filter_mode="blom", state_dir=str(tmp_path / "x")))
+
+
+def test_default_state_dir_is_removed_on_return(spark, corpus, seeds):
+    """Without a state_dir the run's state lives in a temporary directory
+    that is gone when run_crawl returns."""
+    root = tempfile.gettempdir()
+    before = set(os.listdir(root))
+    res = run_crawl(spark, corpus, seeds,
+                    CrawlConfig(max_iterations=2, max_per_host=15, salt=1,
+                                filter_mode="none"))
+    assert res.total_fetched > 0
+    assert set(os.listdir(root)) - before == set()
 
 
 def test_determinism_same_seeds_same_result(spark, corpus, seeds, tmp_path):

@@ -30,16 +30,6 @@ SF = "/root/testdata/sf0.001"
 # name -> executed plan string, built once per test session for both audits
 _PLANS: dict[str, str] = {}
 
-# dedup.crawl_once_gate splits an uncached probe column into its fresh and
-# maybe branches, so these plans run the membership UDF once per branch
-# (run_crawl persists its probed wave first and runs it once).
-GATE_PROBES_PER_BRANCH = {
-    "d1b_crawl_once_bloom",
-    "d1c_crawl_once_cuckoo",
-    "d1d_crawl_once_cuckoo_delete",
-}
-GATE_XFAIL_REASON = "crawl_once_gate reads its uncached probe column in more than one branch"
-
 
 def _plan(spark, name: str) -> str:
     if name not in _PLANS:
@@ -66,15 +56,7 @@ def test_no_cartesian_no_rowwise_python(spark, name):
     assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        pytest.param(q, marks=pytest.mark.xfail(strict=True, reason=GATE_XFAIL_REASON))
-        if q in GATE_PROBES_PER_BRANCH
-        else q
-        for q in entry.queries()
-    ],
-)
+@pytest.mark.parametrize("name", [q for q in entry.queries()])
 def test_no_python_udf_evaluated_twice(spark, name):
     repeated = {f: n for f, n in _python_udf_calls(_plan(spark, name)).items() if n > 1}
     assert not repeated, f"{name} evaluates Python UDFs more than once: {repeated}"
