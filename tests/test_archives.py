@@ -20,8 +20,7 @@ from hepcrawl_spark.sources.archives import (
     pack_tar_by_group,
     pack_zip_by_group,
 )
-
-REF = "/root/reference/tests/unit/responses"
+from tests.conftest import FIXTURES, needs_reference
 
 
 def _one_blob_df(spark, path, extra=None):
@@ -33,8 +32,9 @@ def _one_blob_df(spark, path, extra=None):
     )
 
 
+@needs_reference("edp/test_gz.tar.gz")
 def test_edp_targz_xml_members_match_tarfile(spark):
-    path = f"{REF}/edp/test_gz.tar.gz"
+    path = f"{FIXTURES}/edp/test_gz.tar.gz"
     got = explode_archive_members(
         _one_blob_df(spark, path), fmt="tar", suffix=".xml"
     ).collect()
@@ -48,8 +48,9 @@ def test_edp_targz_xml_members_match_tarfile(spark):
     assert all(r["source_file"] == "test_gz.tar.gz" for r in got)
 
 
+@needs_reference("edp/test_rich.tar.bz2")
 def test_edp_tarbz2_autodetects_compression(spark):
-    path = f"{REF}/edp/test_rich.tar.bz2"
+    path = f"{FIXTURES}/edp/test_rich.tar.bz2"
     got = explode_archive_members(
         _one_blob_df(spark, path), fmt="tar", suffix=".xml"
     ).collect()
@@ -63,8 +64,9 @@ def test_edp_tarbz2_autodetects_compression(spark):
     assert len(got) >= 1
 
 
+@needs_reference("iop/packages/test.tar.gz")
 def test_iop_targz_pdf_members_flattened(spark):
-    path = f"{REF}/iop/packages/test.tar.gz"
+    path = f"{FIXTURES}/iop/packages/test.tar.gz"
     with tarfile.open(path) as tar:
         names = [m.path for m in tar.getmembers() if m.isfile()]
     pdfs = [n for n in names if n.endswith(".pdf")]
@@ -83,10 +85,11 @@ def test_iop_targz_pdf_members_flattened(spark):
     )
 
 
+@needs_reference("world_scientific/wsp_record.xml")
 def test_wsp_style_zip_member_feeds_jats_parser(spark):
     """The S4 pipeline end-to-end: a WSP-shaped zip (the reference fixture
     xml zipped in-memory) -> binary column -> member scan -> JATS parser."""
-    fixture = f"{REF}/world_scientific/wsp_record.xml"
+    fixture = f"{FIXTURES}/world_scientific/wsp_record.xml"
     with open(fixture, "rb") as f:
         body = f.read()
     buf = io.BytesIO()

@@ -1,7 +1,9 @@
 """F2/F4 predicates, J4 back-join, S12 feed parser unit tests."""
 
 import glob
+import os
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from hepcrawl_spark.operators.filters import (
@@ -14,6 +16,9 @@ from hepcrawl_spark.parsers.consyn_feed import (
     parse_batch_feed_body,
     parse_batch_feed_pages,
 )
+from tests.conftest import FIXTURES
+
+GOLDEN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 
 COLS = "article_type string, title string, journal_title string, journal_volume string, artid string, page_start string"
 
@@ -43,12 +48,24 @@ def test_harvest_worthy_each_leg_of_the_conjunction(spark):
 
 
 def test_real_elsevier_fixture_is_harvest_worthy(spark):
-    """A real full-length NIMA article must pass the F2 gate end-to-end."""
+    """A real full-length NIMA article must pass the F2 gate end-to-end.
+
+    The body is the reference fixture ``elsevier/j.nima.2019.162728.xml``,
+    committed verbatim in ``fixtures/elsevier_golden_pages.parquet`` by
+    ``tools/make_fixture_tables.py``; where the reference is present, the
+    committed copy is checked against it byte for byte."""
     from hepcrawl_spark.parsers.elsevier import parse_elsevier_pages
 
-    path = "/root/reference/tests/unit/responses/elsevier/j.nima.2019.162728.xml"
-    with open(path, "rb") as f:
-        body = f.read().decode("utf-8")
+    (raw,) = pq.read_table(
+        f"{GOLDEN}/elsevier_golden_pages.parquet",
+        columns=["html"],
+        filters=[("url", "==", "https://consyn.elsevier.com/golden/j.nima.2019.162728")],
+    ).column("html").to_pylist()
+    path = f"{FIXTURES}/elsevier/j.nima.2019.162728.xml"
+    if os.path.exists(path):
+        with open(path, "rb") as f:
+            assert f.read() == raw
+    body = raw.decode("utf-8")
     pages = spark.createDataFrame(
         [("u", body)], "url string, html string"
     ).select("url", F.current_timestamp().alias("warc_ts"), "html",

@@ -16,8 +16,12 @@ from hepcrawl_spark.tohep import (
     normalize_hepcrawl_record,
     tohep_normalize_pages,
 )
+from tests.conftest import FIXTURES, needs_reference
 
-TOHEP = "/root/reference/tests/unit/responses/tohep"
+TOHEP = f"{FIXTURES}/tohep"
+GENERIC = needs_reference(
+    "tohep/in_generic_crawler_record.yaml", "tohep/out_generic_crawler_record.yaml"
+)
 
 
 def _load(name):
@@ -25,11 +29,13 @@ def _load(name):
         return yaml.safe_load(f)
 
 
+@GENERIC
 def test_generic_crawler_record_golden():
     produced = hepcrawl_to_hep(_load("in_generic_crawler_record.yaml"))
     assert produced == _load("out_generic_crawler_record.yaml")
 
 
+@needs_reference("tohep/in_no_document_type.yaml", "tohep/out_no_document_type.yaml")
 def test_no_document_type_golden():
     produced = hepcrawl_to_hep(_load("in_no_document_type.yaml"))
     assert produced == _load("out_no_document_type.yaml")
@@ -114,6 +120,7 @@ def test_hep_to_hep_documents_patch_matches_j4_semantics():
     assert out3["documents"][0]["url"] == "https://pub/o2.pdf"
 
 
+@GENERIC
 def test_tohep_normalize_pages_spark_surface(spark):
     crawler = _load("in_generic_crawler_record.yaml")
     df = spark.createDataFrame(
@@ -160,6 +167,7 @@ def test_two_stage_lifecycle_flat_item_through_spark(spark):
     assert hep["_collections"] == ["Literature"] and hep["curated"] is False
 
 
+@needs_reference("desy/jap133.3.jsonl", "desy/desy_records_from_jsonlines_expected.json")
 def test_desy_pipeline_whole_record_parity():
     """The reference desy pipeline (test_desy.py:96-117 DeepDiff oracle):
     already-hep jsonl records pass through hep_to_hep untouched (no files)
@@ -167,7 +175,7 @@ def test_desy_pipeline_whole_record_parity():
     reference's expected fixture."""
     from hepcrawl_spark.parsers.desy import parse_desy_body
 
-    base = "/root/reference/tests/unit/responses/desy"
+    base = f"{FIXTURES}/desy"
     with open(f"{base}/jap133.3.jsonl", "rb") as f:
         parsed = parse_desy_body(f.read())
     with open(f"{base}/desy_records_from_jsonlines_expected.json") as f:
