@@ -7,8 +7,9 @@ Catalyst query:
 
   1. politeness wave select   (P1/P2/P4: salted per-host window cap)
   2. robots gate              (P5: broadcast rules anti-join)
-  3. seen-filtered link admission (D1: the one URL-seen test; SeenFilter
-                               prefilter — none, bloom, bloom_table or cuckoo)
+  3. link admission           (D1: links ⋉̸ pre-wave frontier, then the one
+                               URL-seen test; SeenFilter prefilter — none,
+                               bloom, bloom_table or cuckoo)
   4. fetch                    (J5: equi-join wave vs pages on url)
   5. parse + outlink explode  (F5/UDTF: regexp link extraction, JVM-side)
   6. state merge              (frontier', url_seen', metrics)
@@ -158,12 +159,11 @@ class CrawlConfig:
     max_attempts: int = 1            # P6 retry/backoff in the live loop:
                                      # a gated url whose fetch FAILS (no
                                      # corpus row) re-enters the frontier
-                                     # with attempt+1 and priority*decay
+                                     # with attempt+1 and halved priority
                                      # until max_attempts, then drops — the
                                      # reference RetryMiddleware semantics.
                                      # 1 = historical behavior (failures
                                      # retire immediately, zero extra jobs)
-    retry_decay: float = 0.5
     max_depth: int | None = None     # Scrapy DEPTH_LIMIT parity: outlinks
                                      # discovered more than max_depth hops
                                      # from a seed never enter the frontier.
@@ -988,7 +988,8 @@ def _run_crawl(
         gated = wave_pre
         if robots is not None:
             gated = (robots_gate_rfc if robots_needs_rfc else robots_gate)(wave_pre, robots)
-        gated = gated.persist()  # holds no seen url: see link admission (3.)
+        # a frontier subset, so it holds no seen url (link admission, 3.)
+        gated = gated.persist()
 
         # 4. fetch join (J5); its count is the exact scheduled count
         sc.setJobDescription("crawl: wave")
@@ -1064,15 +1065,15 @@ def _run_crawl(
         # middleware drops denied requests permanently). wave_pre is cached,
         # so this re-read costs no politeness-window shuffle.
         remaining = frontier.join(wave_pre.select("url"), "url", "left_anti")
-        # 3. link admission: links ⋉̸ wave_seen ⋉̸ remaining ⋉̸ url_seen, the
-        # last behind the seen filter. Probing the raw links puts the
-        # filter's union under the groupBy's shuffle (no extra frontier
-        # part-files), and on the main thread, before persist() replaces the
-        # filter state in the commit pool. A fresh run's first wave has
-        # nothing to probe.
-        links = links.join(wave_seen.select("url"), "url", "left_anti").join(
-            remaining.select("url"), "url", "left_anti"
-        )
+        # 3. link admission: links ⋉̸ frontier ⋉̸ url_seen, the last behind
+        # the seen filter. The pre-wave frontier holds the whole wave and
+        # the remaining rows, so a link to a url this wave took (fetched,
+        # failed or robots-blocked) or still queues never re-enters at
+        # attempt 0. Probing the raw links puts the filter's union under
+        # the groupBy's shuffle (no extra frontier part-files), and on the
+        # main thread, before persist() replaces the filter state in the
+        # commit pool. A fresh run's first wave has nothing to probe.
+        links = links.join(frontier.select("url"), "url", "left_anti")
         candidates = (
             seen_filter.unseen(links, url_seen, probe=it > 0)
             .groupBy("url", "host")
@@ -1090,20 +1091,18 @@ def _run_crawl(
         retry = None
         if cfg.max_attempts > 1:
             # P6 retry/backoff (reference RetryMiddleware; decay_priority is
-            # the oracle-gated twin): gated urls with NO corpus row are this
-            # wave's failed fetches. They were retired with wave_pre above;
-            # re-admit them with attempt+1 and decayed priority until
-            # max_attempts. Pay-for-use: one extra anti-join per iteration
-            # only when enabled. The retry row WINS over a same-wave outlink
-            # rediscovery of the same url (anti-join below) — otherwise the
-            # frontier holds duplicate rows whose attempt=0 copy keeps
-            # respawning fresh retries past max_attempts.
-            failed = gated.join(corpus.select("url"), "url", "left_anti")
+            # the oracle-gated twin): gated urls that fetched nothing are
+            # this wave's failed fetches (`fetched` is gated ⋈ corpus, and
+            # cached). They were retired with wave_pre above; re-admit them
+            # with attempt+1 and decayed priority until max_attempts.
+            # Pay-for-use: one extra anti-join per iteration only when
+            # enabled. A same-wave outlink to a retried url cannot add an
+            # attempt=0 duplicate: admission already dropped it as a
+            # frontier url.
+            failed = gated.join(fetched.select("url"), "url", "left_anti")
             retry = decay_priority(
-                failed.filter(F.col("attempt") < cfg.max_attempts - 1),
-                decay=cfg.retry_decay,
+                failed.filter(F.col("attempt") < cfg.max_attempts - 1)
             )
-            candidates = candidates.join(retry.select("url"), "url", "left_anti")
         next_frontier = remaining.unionByName(
             candidates.select(*frontier_cols)
         )

@@ -11,8 +11,6 @@ Two tiers:
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -32,23 +30,9 @@ def portable_hash64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def portable_hash64_py(value: str) -> int:
-    """Driver/pandas-side twin of :func:`portable_hash64`."""
-    return int(hashlib.md5(value.encode("utf-8")).hexdigest()[:15], 16)
-
-
-# DuckDB SQL snippet builder for oracle queries.
-def portable_hash64_sql(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
 def portable_hash32(col: Column | str) -> Column:
     """28-bit md5-based hash — small enough that k-permutation arithmetic
     (h*a+b mod p) never overflows int64 even under ANSI mode, in Spark or
     DuckDB. Twin: ``('0x' || substr(md5(x), 1, 7))::BIGINT``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 7), 16, 10).cast("bigint")
-
-
-def portable_hash32_sql(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 7))::BIGINT)"

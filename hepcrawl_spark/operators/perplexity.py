@@ -37,49 +37,12 @@ DSIR in dsir.py).
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import normalize_text
 from .dsir import DEFAULT_BUCKETS
-
-
-def _bucket(g: Column, num_buckets: int) -> Column:
-    return F.pmod(
-        F.conv(F.substring(F.md5(g), 1, 7), 16, 10).cast("bigint"),
-        F.lit(num_buckets),
-    )
-
-
-def _toks(text_col: Column | str) -> Column:
-    return F.split(normalize_text(text_col), " ")
-
-
-def context_buckets(
-    text_col: Column | str = "text", num_buckets: int = DEFAULT_BUCKETS
-) -> Column:
-    """Unigram bucket of each bigram's CONTEXT token (positions 1..n-1)."""
-    toks = _toks(text_col)
-    n = F.size(toks)
-    ctx = F.slice(toks, 1, F.greatest(n - 1, F.lit(0)))
-    return F.transform(ctx, lambda t: _bucket(t, num_buckets))
-
-
-def bigram_buckets(
-    text_col: Column | str = "text", num_buckets: int = DEFAULT_BUCKETS
-) -> Column:
-    """Bigram bucket ids, positionally aligned with ``context_buckets``."""
-    toks = _toks(text_col)
-    n = F.size(toks)
-    pairs = F.zip_with(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    return F.transform(pairs, lambda g: _bucket(g, num_buckets))
 
 
 @dataclass

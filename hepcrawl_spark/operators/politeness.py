@@ -175,6 +175,9 @@ def select_wave(
             F.pmod(shard - F.lit(rotation), s) < F.pmod(cap, s), F.lit(1)
         ).otherwise(F.lit(0))
 
+    # a uniform salt is the per-host path with no listed host; Catalyst
+    # folds the literal salt's branches
+    per_salt = F.lit(max(salt, 1))
     if host_salts is not None:
         salts = host_salts.select(
             F.col("host").alias("_s_host"), F.col("salt").alias("_host_salt")
@@ -182,18 +185,13 @@ def select_wave(
         frontier = frontier.join(
             F.broadcast(salts), F.col(host_col) == F.col("_s_host"), "left"
         ).drop("_s_host")
-        per_salt = F.coalesce(F.col("_host_salt"), F.lit(max(salt, 1)))
-        shard = F.pmod(F.xxhash64(F.col(order_cols[-1])), per_salt)
-        cap_col = _shard_cap(cap_col, shard, per_salt)
-        part = F.when(per_salt <= 1, F.col(host_col)).otherwise(
-            F.concat(F.col(host_col), F.lit("#"), shard.cast("string"))
-        )
+        per_salt = F.coalesce(F.col("_host_salt"), per_salt)
         drop_cols.append("_host_salt")
-    else:
-        if salt > 1:
-            shard = F.pmod(F.xxhash64(F.col(order_cols[-1])), F.lit(salt))
-            cap_col = _shard_cap(cap_col, shard, F.lit(salt))
-        part = salted_host(host_col, order_cols[-1], salt)
+    shard = F.pmod(F.xxhash64(F.col(order_cols[-1])), per_salt)
+    cap_col = _shard_cap(cap_col, shard, per_salt)
+    part = F.when(per_salt <= 1, F.col(host_col)).otherwise(
+        F.concat(F.col(host_col), F.lit("#"), shard.cast("string"))
+    )
     w = (
         Window.partitionBy(part)
         .orderBy(F.col(order_cols[0]).desc(), *[F.col(c) for c in order_cols[1:]])

@@ -52,12 +52,3 @@ def exchange_count(df: DataFrame) -> int:
         for line in plan.splitlines()
         if line.strip().startswith("Exchange") or " Exchange " in line
     )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = formatted_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        if "WholeStageCodegen" in line:
-            ids.add(line.split("WholeStageCodegen")[1].split(")")[0])
-    return len(ids)

@@ -606,7 +606,7 @@ def test_failed_fetch_retry_backoff(spark, corpus, seeds, tmp_path):
         spark, corpus, seeds.unionByName(ghost),
         CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
                     filter_mode="none", state_dir=sd, keep_snapshots=10,
-                    max_attempts=3, retry_decay=0.5),
+                    max_attempts=3),
     )
     assert res.total_fetched > 0
     f0 = spark.read.parquet(f"{sd}/iter_0000/frontier").filter(
@@ -679,13 +679,57 @@ def test_retry_row_wins_over_same_wave_rediscovery(spark, tmp_path):
         spark, pages, seeds2,
         CrawlConfig(max_iterations=1, max_per_host=10, salt=1,
                     filter_mode="none", state_dir=sd, keep_snapshots=10,
-                    max_attempts=3, retry_decay=0.5),
+                    max_attempts=3),
     )
     rows = spark.read.parquet(f"{sd}/iter_0000/frontier").filter(
         F.col("url") == ghost_url
     ).collect()
     assert len(rows) == 1
     assert rows[0]["attempt"] == 1 and rows[0]["priority"] == 4.0
+
+
+@pytest.mark.parametrize("linked", ["blocked", "failed"])
+def test_url_the_wave_took_is_not_readmitted_by_a_same_wave_link(spark, tmp_path, linked):
+    """A url the wave took but did not fetch leaves the frontier for good,
+    even when a page fetched in the same wave links to it: P links to B
+    (robots-blocked) or to G (no corpus row). All three are seeds and
+    max_attempts=1, so the crawl schedules P and G, fetches P, and ends."""
+    p_url = "https://a.example.org/p"
+    b_url = "https://a.example.org/blocked"
+    g_url = "https://ghost.example.org/nope"
+    target = b_url if linked == "blocked" else g_url
+    pages = (
+        spark.createDataFrame(
+            [(p_url, f'x <a href="{target}">t</a>'), (b_url, "blocked page")],
+            "url string, text string",
+        )
+        .withColumn("warc_ts", F.current_timestamp())
+        .withColumn("html", F.encode("text", "UTF-8"))
+        .withColumn("lang", F.lit("en"))
+    )
+    seeds3 = spark.createDataFrame(
+        [
+            (p_url, "a.example.org", 1.0),
+            (b_url, "a.example.org", 2.0),
+            (g_url, "ghost.example.org", 3.0),
+        ],
+        "url string, host string, priority double",
+    ).withColumn("discovered_ts", F.current_timestamp())
+    robots = spark.createDataFrame(
+        [("a.example.org", "/blocked", "disallow")],
+        "host string, path_prefix string, allow string",
+    )
+    sd = str(tmp_path / linked)
+    res = run_crawl(
+        spark, pages, seeds3,
+        CrawlConfig(max_iterations=3, max_per_host=10, salt=1,
+                    filter_mode="none", state_dir=sd, keep_snapshots=10),
+        robots=robots,
+    )
+    f0 = {r["url"] for r in spark.read.parquet(f"{sd}/iter_0000/frontier").collect()}
+    assert b_url not in f0 and g_url not in f0
+    assert [i.scheduled for i in res.iterations] == [2]
+    assert [i.fetched for i in res.iterations] == [1]
 
 
 def test_pagerank_priority_refresh(spark, corpus, seeds, tmp_path):
@@ -915,7 +959,7 @@ def test_all_failed_wave_still_retries_in_fast_mode(spark, tmp_path):
         spark, pages, ghosts,  # every seed fails -> all-failed waves
         CrawlConfig(max_iterations=5, max_per_host=10, salt=1,
                     filter_mode="none", state_dir=sd, keep_snapshots=10,
-                    max_attempts=3, retry_decay=0.5),
+                    max_attempts=3),
     )
     f0 = spark.read.parquet(f"{sd}/iter_0000/frontier")
     assert f0.count() == 3 and {r["attempt"] for r in f0.collect()} == {1}
@@ -1230,9 +1274,10 @@ def test_local_frame_is_a_local_relation_pruned_when_empty(spark):
 
 @pytest.mark.parametrize("filter_mode", ["bloom", "cuckoo"])
 def test_probe_broadcasts_are_released(spark, corpus, seeds, tmp_path, monkeypatch, filter_mode):
-    """Every wave's probe broadcasts the whole filter. Once the wave's
-    cached frames are unpersisted its broadcast is destroyed: a new one is
-    made only when all earlier ones are gone, and none outlives the crawl."""
+    """The probe runs at link admission, once per iteration after the
+    first, and broadcasts the whole filter. Once the wave's cached frames
+    are unpersisted its broadcast is destroyed: a new one is made only when
+    all earlier ones are gone, and none outlives the crawl."""
     from pyspark import SparkContext
 
     made, live_when_made = [], []
