@@ -9,6 +9,7 @@ parquet-backed (Iceberg-style snapshotted) tables of Common-Crawl-style pages.
 
 Layout:
   session     SparkSession factory with scale-tuned configs
+  _zipcache   workers re-read a zip archive only when it changed
   schemas     canonical StructTypes (pages, frontier, url_seen, records, ...)
   functions/  scalar column functions (urls, text, hashing, latex, shaping)
   operators/  dedup (exact/sharded-bloom/cuckoo/minhash/simhash/jaccard),
@@ -24,5 +25,9 @@ Layout:
   streaming/  Structured Streaming twins (windowed aggs, dedup-within-
               watermark, stateful per-host crawl budget)
 """
+
+# imported first, so a Python worker that unpickles any UDF of this package
+# stops re-reading its zip archives at every task start (see _zipcache)
+from . import _zipcache  # noqa: F401
 
 __version__ = "0.1.0"

@@ -141,12 +141,6 @@ def language_name(col: Column | str) -> Column:
     return F.element_at(F.create_map(*pairs), F.lower(_c(col)))
 
 
-def first_truthy(*cols: Column) -> Column:
-    """A4 get_first (utils.py:150-169): first non-null, non-empty value."""
-    cleaned = [F.when(c != "", c) if True else c for c in cols]
-    return F.coalesce(*cleaned)
-
-
 def page_nr_from_range(fpage: Column | str, lpage: Column | str) -> Column:
     """A6: ``lpage - fpage + 1`` (nlm.py:144-158)."""
     return (_c(lpage).cast("long") - _c(fpage).cast("long") + 1).cast("int")

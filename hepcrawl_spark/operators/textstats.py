@@ -117,7 +117,7 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
 
 # the PUBLIC output contract of record_features (after the JVM md5
-# projection); the mapInPandas worker itself emits _WORKER_FIELDS and the
+# projection); the mapInArrow worker itself emits _WORKER_FIELDS and the
 # fingerprint column is derived from _canon JVM-side
 RECORD_FEATURES_FIELDS = (
     "n_tokens int, n_pieces long, en_score double, fingerprint string"
@@ -183,7 +183,9 @@ def record_features(
     body JVM-side (plus one Arrow round-trip for the RE2 kernel); fused
     here the text crosses to the python worker once and every feature is a
     vectorized pyarrow kernel (lower/replace/trim/count) except the
-    fingerprint digest. Verified bit-equal to the column-expression path
+    fingerprint digest. The pass is a ``mapInArrow``: record batches go in
+    and out as Arrow, with no pandas conversion either way. Verified
+    bit-equal to the column-expression path
     (tests/test_dedup.py::test_record_features_fused_matches_columns).
 
     RE2 has no lookahead, so stopword counting double-spaces the normalized
@@ -207,8 +209,8 @@ def record_features(
     ) + ", " + _WORKER_FIELDS
 
     def batches(it):
-        for pdf in it:
-            raw = pa.Array.from_pandas(pdf[text_col], type=pa.string())
+        for batch in it:
+            raw = batch.column(text_col)
             norm = pc.utf8_trim_whitespace(
                 pc.replace_substring_regex(pc.utf8_lower(raw), r"\s+", " ")
             )
@@ -233,21 +235,24 @@ def record_features(
             # AttributeError — round-2 ADVICE). Sorted distinct tokens via
             # Arrow/numpy per batch — no per-row Python anywhere.
             canon = _batch_canonical(norm)
-            out = {c: pdf[c] for c in keep_cols}
-            out.update(
-                {
-                    "n_tokens": n_tokens.to_pandas().astype("Int32"),
-                    "n_pieces": n_pieces.to_pandas().astype("Int64"),
-                    "en_score": en.to_pandas(),
-                    "_canon": canon.to_pandas(),
-                }
+            # mapInArrow does not cast: each column must carry its declared
+            # type (on string input the kernels give int64 n_tokens and
+            # int32 n_pieces); keep_cols are the input's own Arrow columns
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep_cols]
+                + [
+                    pc.cast(n_tokens, pa.int32()),
+                    pc.cast(n_pieces, pa.int64()),
+                    en,
+                    canon,
+                ],
+                names=[*keep_cols, "n_tokens", "n_pieces", "en_score", "_canon"],
             )
-            yield pd.DataFrame(out)
 
     cols = list(keep_cols) + [text_col]
     return (
         pages.select(*cols)
-        .mapInPandas(batches, out_schema)
+        .mapInArrow(batches, out_schema)
         .withColumn("fingerprint", F.md5("_canon"))
         .drop("_canon")
     )

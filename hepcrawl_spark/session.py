@@ -13,16 +13,20 @@ deployment and merely *also* work on local[32]):
   Python only to parse or to probe a membership filter. Each task that
   runs Python code (an Arrow UDF, mapInPandas, or a scan of a
   ``createDataFrame(list)`` Python RDD) pays for worker set-up before any
-  user code runs; PySpark 4.1.2's worker calls ``importlib.invalidate_caches()``
-  at every task start, which on Python 3.11 re-reads the zip directories
-  of ``pyspark.zip`` and the 15 MB spark-core jar on the worker's path.
-  Measured on 4 cores, warm local[4] session, 15 interleaved rounds: a
-  4-task job of ``spark.range(4)`` collected with ``toArrow()`` takes a
-  median 63 ms as a JVM expression, 364 ms through a no-op pandas UDF and
-  376 ms as a scan of a 4-row ``createDataFrame(list)``, i.e. ~300 ms per
-  task run in parallel; ``importlib.invalidate_caches()`` alone, with that
-  path, takes 40-58 ms per call. Driver-built tables therefore go through
-  Arrow-backed ``LocalRelation``s (``crawl/frontier._local_frame``).
+  user code runs. Most of that set-up was PySpark 4.1.2's worker calling
+  ``importlib.invalidate_caches()`` at every task start: on Python 3.11
+  each of the worker's 16 ``zipimporter`` instances (12 for
+  ``pyspark.zip``, 2 for the py4j zip, 2 for the 14 MB spark-core jar)
+  re-reads its archive's whole directory. Measured on 4 cores, warm
+  local[4] session, 4 concurrent tasks: that call took a median 135 ms
+  (p90 217 ms, 160 calls). ``hepcrawl_spark._zipcache``, imported with
+  the package, re-reads an archive only when its mtime or size has
+  changed; the call then takes 0.2 ms, and a 4-task job of
+  ``spark.range(4)`` through a no-op pandas UDF that imports the package
+  went from a median 273-278 ms to 115-118 ms (3 interleaved pairs of 15
+  rounds; 30-51 ms as a JVM expression). A Python stage still costs 2-4x
+  a JVM one, so driver-built tables go through Arrow-backed
+  ``LocalRelation``s (``crawl/frontier._local_frame``).
   A Python UDF's result may feed a generator or a filter only inside the
   same ``select``: across an alias, Catalyst pushes the filter (written,
   or inferred from the generator) below the alias and evaluates the UDF
@@ -111,7 +115,17 @@ def _prefork_python_workers(spark: SparkSession) -> None:
     first iteration drops ~1.5 s with the pool pre-forked). One
     parallelism-wide single-row-per-task no-op Arrow job moves the fork
     here. Nothing is cached and no data is read — this is pool pre-fork
-    only, the Arrow-UDF analog of warming a connection pool.
+    only, the Arrow-UDF analog of warming a connection pool. The no-op
+    imports ``hepcrawl_spark`` in each worker, so that ``_zipcache`` is in
+    place before the first real query.
+
+    Under PySpark 4.1.2 this job does not run: this module's
+    ``from __future__ import annotations`` turns ``_noop``'s hints into
+    strings that ``pandas_udf`` rejects (``UNSUPPORTED_SIGNATURE``), and
+    the ``except`` below swallows that. The pool forks inside the first
+    query (a fresh local[4] session's first no-op Arrow job takes
+    3.5-4.2 s, the next 0.3-0.5 s), and a worker installs ``_zipcache``
+    when its first task unpickles a package UDF.
 
     Local masters only: under a cluster manager the executor set may not
     even be allocated yet (dynamic allocation), and worker fork there
@@ -124,6 +138,10 @@ def _prefork_python_workers(spark: SparkSession) -> None:
 
         @pandas_udf("long")
         def _noop(x: pd.Series) -> pd.Series:
+            try:
+                import hepcrawl_spark  # noqa: F401  (installs _zipcache)
+            except ImportError:
+                pass
             return x
 
         n = spark.sparkContext.defaultParallelism

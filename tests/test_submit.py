@@ -15,6 +15,7 @@ def test_zip_builds_and_imports(tmp_path):
     names = zipfile.ZipFile(out).namelist()
     assert "hepcrawl_spark/crawl/frontier.py" in names
     assert "hepcrawl_spark/sources/merge_store.py" in names
+    assert "hepcrawl_spark/_zipcache.py" in names
     # determinism: same tree -> same bytes
     out2 = build_zip(str(tmp_path / "pkg2.zip"))
     assert open(out, "rb").read() == open(out2, "rb").read()
@@ -26,6 +27,8 @@ def test_zip_builds_and_imports(tmp_path):
         "import hepcrawl_spark.crawl.frontier as fr; "
         "import hepcrawl_spark.operators.components; "
         "import hepcrawl_spark.parsers.sitemap; "
+        "import hepcrawl_spark._zipcache as zc; "
+        f"assert zc.__file__.startswith({out!r}), zc.__file__; "
         "print(fr.CrawlConfig().filter_mode)"
     )
     r = subprocess.run(
