@@ -8,8 +8,10 @@ Catalyst query:
   1. politeness wave select   (P1/P2/P4: salted per-host window cap)
   2. robots gate              (P5: broadcast rules anti-join)
   3. link admission           (D1: links ⋉̸ pre-wave frontier, then the one
-                               URL-seen test; SeenFilter prefilter — none,
-                               bloom, bloom_table or cuckoo)
+                               URL-seen test: the exact anti-join against
+                               url_seen, prefiltered by the SeenFilter —
+                               none, bloom, bloom_table or cuckoo — only
+                               while url_seen is too large to broadcast)
   4. fetch                    (J5: equi-join wave vs pages on url)
   5. parse + outlink explode  (F5/UDTF: regexp link extraction, JVM-side)
   6. state merge              (frontier', url_seen', metrics)
@@ -47,16 +49,17 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from ..operators import textstats as X
 from ..operators.bloom import (
     ShardedBloom,
     bloom_merge_delta_cogroup,
+    bloom_probe_broadcast,
     bloom_probe_cogroup,
+    bloom_words_frame,
     build_bloom_sharded,
     empty_bloom_shard_table,
-    sharded_might_contain_udf,
 )
 from ..operators.cuckoo import (
     ShardedCuckoo,
@@ -105,7 +108,13 @@ class CrawlConfig:
                                      # 10^10-URL path)
                                      # | 'cuckoo' (resident delete-capable
                                      # filter, per-wave delta inserts)
-                                     # | 'none'
+                                     # | 'none'. Every filter absorbs each
+                                     # wave, but links probe it only while
+                                     # url_seen is too large to broadcast:
+                                     # below that, the exact anti-join is a
+                                     # broadcast hash join, and the probe
+                                     # could spare it nothing. The result
+                                     # is the same in every mode.
     auto_filter_threshold: int = 5_000_000
                                      # 'auto' cutover: above this expected
                                      # total the broadcast-bloom mode's
@@ -299,11 +308,27 @@ def extract_outlinks(
     )
 
 
+def _nullable(dt):
+    """``dt`` with every field, element and value nullable: the schema a
+    parquet read gives back for a frame written with ``dt``."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
 def _snapshot(df: DataFrame, path: str) -> DataFrame:
     """Write a parquet snapshot and read it back (lineage truncation +
-    checkpoint). The write is the 'Iceberg snapshot commit' stand-in."""
+    checkpoint). The write is the 'Iceberg snapshot commit' stand-in. The
+    read-back is given the written schema, so no job infers it from the
+    files."""
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(_nullable(df.schema)).parquet(path)
 
 
 def _cut(df: DataFrame, path: str, durable: bool) -> DataFrame:
@@ -396,8 +421,10 @@ class SeenFilter:
     link admission; one per run_crawl call. This base class is filter_mode
     'none', the exact anti-join alone. Each subclass prefilters it with one
     membership filter: ``_maybe(links)`` adds a boolean ``_maybe`` column,
-    False only for a url the filter never absorbed. It owns the filter's
-    state through:
+    False only for a url the filter never absorbed. The crawl probes only
+    while url_seen is too large to broadcast (see ``_run_crawl``); the
+    filter absorbs every wave either way, so it is ready once url_seen
+    outgrows the threshold. It owns the filter's state through:
 
     - ``restore(manifest, url_seen, invalidated, n_invalidated, seen_size)``:
       an empty filter when ``manifest`` is None, else restored or rebuilt;
@@ -449,8 +476,9 @@ class SeenFilter:
 
 
 class BloomSeenFilter(SeenFilter):
-    """'bloom': the shard bitmaps live on the driver, broadcast into the
-    probe UDF; not persisted, resume rebuilds them from url_seen."""
+    """'bloom': the shard bitmaps live on the driver; the probe broadcast-
+    joins them as a (shard, words) LocalRelation and tests bits in the JVM.
+    Not persisted: resume rebuilds them from url_seen."""
 
     driver_delta = True
 
@@ -464,8 +492,14 @@ class BloomSeenFilter(SeenFilter):
             )
 
     def _maybe(self, links):
-        self._probe_udf = sharded_might_contain_udf(self.spark, self.bf)
-        return links.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
+        n_bits, k = self.bf.shape
+        return bloom_probe_broadcast(
+            links.withColumn("url_hash", F.xxhash64("url")),
+            bloom_words_frame(self.spark, self.bf),
+            n_bits,
+            k,
+            n_shards=self.bf.n_shards,
+        ).drop("url_hash")
 
     def absorb(self, fetched, hashes):
         self.bf.add(hashes)
@@ -712,22 +746,46 @@ def _fetch(gated: DataFrame, corpus: DataFrame) -> tuple[int, DataFrame]:
 
 
 def _wave_metrics(fetched: DataFrame, with_hashes: bool):
-    """ONE JVM-only pass over the fetched wave yields per-partition counts
-    AND, when ``with_hashes``, the wave's url hashes for a driver-side
-    filter delta. The driver receives an Arrow table of (partition_id,
-    hash) per fetched url, or of (partition_id, count) per partition —
-    never the filter, and no Python worker runs.
-    Returns ([(partition_id, n)] by partition, int64 hashes or None)."""
+    """ONE JVM-only pass over the fetched wave yields per-partition counts,
+    the wave's url bytes AND, when ``with_hashes``, its url hashes for a
+    driver-side filter delta. The driver receives an Arrow table of
+    (partition_id, hash, url bytes) per fetched url, or of (partition_id,
+    count, url bytes) per partition — never the filter, and no Python
+    worker runs.
+    Returns ([(partition_id, n)] by partition, int64 hashes or None,
+    total url bytes)."""
     pid = F.spark_partition_id().alias("partition_id")
+    nbytes = F.octet_length("url")
     if with_hashes:
-        t = fetched.select(pid, F.xxhash64("url").alias("h")).toArrow()
+        t = fetched.select(
+            pid, F.xxhash64("url").alias("h"), nbytes.alias("b")
+        ).toArrow()
         pids, counts = np.unique(
             np.asarray(t.column("partition_id"), dtype=np.int32), return_counts=True
         )
         hashes = np.asarray(t.column("h"), dtype=np.int64)
-        return list(zip(pids.tolist(), counts.tolist())), hashes
-    t = fetched.groupBy(pid).count().toArrow()  # one row per partition
-    return sorted(zip(t.column("partition_id").to_pylist(), t.column("count").to_pylist())), None
+        url_bytes = int(np.asarray(t.column("b"), dtype=np.int64).sum())
+        return list(zip(pids.tolist(), counts.tolist())), hashes, url_bytes
+    t = (  # one row per partition
+        fetched.groupBy(pid)
+        .agg(F.count("*").alias("count"), F.sum(nbytes).alias("b"))
+        .toArrow()
+    )
+    counts = zip(t.column("partition_id").to_pylist(), t.column("count").to_pylist())
+    url_bytes = sum(b or 0 for b in t.column("b").to_pylist())
+    return sorted(counts), None, url_bytes
+
+
+def _broadcast_threshold(spark: SparkSession) -> int:
+    """The session's broadcast-join size threshold in bytes, as AQE applies
+    it when it re-plans a join: spark.sql.adaptive.autoBroadcastJoinThreshold
+    when set, else spark.sql.autoBroadcastJoinThreshold. <= 0: never
+    broadcast."""
+    conf = spark._jsparkSession.sessionState().conf()
+    aqe = conf.getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD()
+    )
+    return aqe.get() if aqe.isDefined() else conf.autoBroadcastJoinThreshold()
 
 
 def _rank_priorities(frontier: DataFrame, edges_path: str, iterations: int) -> DataFrame:
@@ -866,7 +924,7 @@ def _run_crawl(
     if cfg.max_depth is not None:
         link_meta = {**(link_meta or {}), "depth": (depth + 1).cast("string")}
     m = read_manifest(state_dir) if resume else None
-    start_iter = seen_size = 0
+    start_iter = seen_size = seen_bytes = 0
     host_used = None  # (host, used) budget-consumption state
     trap_tpls = None  # collected (host, template) trap flags (trap_detect_every)
     if m is not None:
@@ -886,8 +944,9 @@ def _run_crawl(
         else:
             url_seen = spark.read.parquet(f"{state_dir}/iter_{m['iteration']:04d}/url_seen")
         # the url_seen cardinality must survive the restart: the cuckoo
-        # rebuild is sized from it
+        # rebuild is sized from it. Without seen_bytes the run probes.
         seen_size = m.get("seen_size") or url_seen.count()
+        seen_bytes = m.get("seen_bytes")
     else:
         frontier = seeds.select(
             "url",
@@ -946,6 +1005,12 @@ def _run_crawl(
         # outside the loop can hold one, so gate the restored frontier once
         frontier = crawl_once_gate(frontier, url_seen, new_ts_col="discovered_ts")
 
+    # link admission probes the seen filter only when its exact anti-join
+    # would shuffle: while url_seen fits under the broadcast threshold, the
+    # broadcast hash join already probes an exact in-memory set (Spark's
+    # runtime bloom filter skips such joins by the same rule).
+    # seen_bytes bounds url_seen's url bytes from above, like seen_size.
+    broadcast_max = _broadcast_threshold(spark)
     result = CrawlResult()
     metrics_rows = []
 
@@ -1007,7 +1072,9 @@ def _run_crawl(
         # one action yields per-partition metrics (A2/north rule), the fetched
         # count, and the filter's delta hashes — fused into a single pass
         sc.setJobDescription("crawl: metrics")
-        part_metrics, hashes = _wave_metrics(fetched, seen_filter.driver_delta)
+        part_metrics, hashes, url_bytes = _wave_metrics(
+            fetched, seen_filter.driver_delta
+        )
         seen_filter.absorb(fetched, hashes)
         fetched_n = sum(n for _, n in part_metrics)
         # failed fetches: gated urls without a corpus row (a corpus holding
@@ -1074,8 +1141,11 @@ def _run_crawl(
         # main thread, before persist() replaces the filter state in the
         # commit pool. A fresh run's first wave has nothing to probe.
         links = links.join(frontier.select("url"), "url", "left_anti")
+        probe = it > 0 and (
+            seen_bytes is None or broadcast_max <= 0 or seen_bytes > broadcast_max
+        )
         candidates = (
-            seen_filter.unseen(links, url_seen, probe=it > 0)
+            seen_filter.unseen(links, url_seen, probe=probe)
             .groupBy("url", "host")
             .agg(F.min("discovered_ts").alias("discovered_ts"), *meta_agg)
             .withColumn("priority", F.lit(0.0))
@@ -1224,6 +1294,8 @@ def _run_crawl(
         else:
             new_frontier_size = -1
             seen_size += fetched_n  # upper bound (exact when urls are unique)
+        if seen_bytes is not None:
+            seen_bytes += url_bytes
 
         if durable:
             manifest = {
@@ -1233,6 +1305,7 @@ def _run_crawl(
                 else f"{it_dir}/url_seen",
                 "seen_store": cfg.seen_store,
                 "seen_size": seen_size,
+                "seen_bytes": seen_bytes,
                 "meta_live": meta_live,
                 **filter_fields,
             }

@@ -22,3 +22,14 @@ def spark():
     s = get_spark(app_name="hepcrawl-spark-tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """spark.sql.autoBroadcastJoinThreshold=-1 for one test: no join is
+    broadcast by size, so crawl link admission probes its seen filter."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)

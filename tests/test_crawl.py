@@ -64,6 +64,16 @@ def test_fixpoint_progress_and_metrics(spark, corpus, seeds, tmp_path):
 
 def test_filter_modes_equivalent(spark, corpus, seeds, tmp_path):
     """bloom- and cuckoo-accelerated gates must not change the crawl result."""
+    _check_filter_modes_equivalent(spark, corpus, seeds, tmp_path)
+
+
+def test_filter_modes_equivalent_when_probing(spark, corpus, seeds, tmp_path, no_broadcast):
+    """The same with every link probing its filter: nothing is broadcast by
+    size, so admission's exact anti-join would shuffle."""
+    _check_filter_modes_equivalent(spark, corpus, seeds, tmp_path)
+
+
+def _check_filter_modes_equivalent(spark, corpus, seeds, tmp_path):
     seen = {}
     scheds = {}
     for mode in ("none", "bloom", "bloom_table", "cuckoo"):
@@ -79,18 +89,21 @@ def test_filter_modes_equivalent(spark, corpus, seeds, tmp_path):
     assert scheds["none"] == scheds["bloom"] == scheds["bloom_table"] == scheds["cuckoo"]
 
 
-def test_bloom_table_mode_keeps_filter_off_the_driver(spark, corpus, seeds, tmp_path, monkeypatch):
+def test_bloom_table_mode_keeps_filter_off_the_driver(
+    spark, corpus, seeds, tmp_path, monkeypatch, no_broadcast
+):
     """filter_mode='bloom_table': probe and delta-merge are cogroups — the
     DRIVER must never touch a bitmap or a hash blob. Driver-side filter
     entry points are patched to raise; executor-side workers re-import the
-    module fresh, so the patch only guards the driver process."""
+    module fresh, so the patch only guards the driver process. Nothing is
+    broadcast by size, so the probe runs."""
     import hepcrawl_spark.crawl.frontier as FR
 
     def _boom(*a, **k):
         raise AssertionError("driver-side filter state touched in bloom_table mode")
 
     monkeypatch.setattr(FR, "build_bloom_sharded", _boom)
-    monkeypatch.setattr(FR, "sharded_might_contain_udf", _boom)
+    monkeypatch.setattr(FR, "bloom_words_frame", _boom)
     monkeypatch.setattr(FR, "build_cuckoo", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "add", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "might_contain", _boom)
@@ -111,11 +124,14 @@ def test_bloom_table_mode_keeps_filter_off_the_driver(spark, corpus, seeds, tmp_
     assert len(res2.iterations) >= 1
 
 
-def test_auto_filter_mode_switches_on_scale(spark, corpus, seeds, tmp_path, monkeypatch):
+def test_auto_filter_mode_switches_on_scale(
+    spark, corpus, seeds, tmp_path, monkeypatch, no_broadcast
+):
     """filter_mode='auto': below the threshold the cheap broadcast bloom
     runs; above it the run MUST take the zero-driver cogroup path — same
     driver-side tripwires as the explicit bloom_table test. Results match
-    the explicit modes either way."""
+    the explicit modes either way. Nothing is broadcast by size, so the
+    probes run."""
     import hepcrawl_spark.crawl.frontier as FR
 
     # small expected scale -> broadcast bloom (driver path allowed)
@@ -141,7 +157,7 @@ def test_auto_filter_mode_switches_on_scale(spark, corpus, seeds, tmp_path, monk
         raise AssertionError("driver-side filter state touched in auto mode")
 
     monkeypatch.setattr(FR, "build_bloom_sharded", _boom)
-    monkeypatch.setattr(FR, "sharded_might_contain_udf", _boom)
+    monkeypatch.setattr(FR, "bloom_words_frame", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "add", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "might_contain", _boom)
     sd_big = str(tmp_path / "auto_big")
@@ -392,6 +408,17 @@ def test_frontier_never_holds_a_seen_url(
 
 @pytest.mark.parametrize("filter_mode", ["none", "bloom", "bloom_table", "cuckoo"])
 def test_resume_equals_straight_run(spark, corpus, seeds, tmp_path, filter_mode):
+    _check_resume_equals_straight_run(spark, corpus, seeds, tmp_path, filter_mode)
+
+
+@pytest.mark.parametrize("filter_mode", ["none", "bloom", "bloom_table", "cuckoo"])
+def test_resume_equals_straight_run_when_probing(
+    spark, corpus, seeds, tmp_path, filter_mode, no_broadcast
+):
+    _check_resume_equals_straight_run(spark, corpus, seeds, tmp_path, filter_mode)
+
+
+def _check_resume_equals_straight_run(spark, corpus, seeds, tmp_path, filter_mode):
     cfgkw = dict(max_per_host=15, salt=1, filter_mode=filter_mode, n_expected_urls=5000)
     sd_full = str(tmp_path / "full")
     run_crawl(spark, corpus, seeds, CrawlConfig(max_iterations=4, state_dir=sd_full, **cfgkw))
@@ -1198,8 +1225,9 @@ def test_scheduled_is_exact_and_errors_count_failed_fetches(spark, corpus, seeds
 
 def test_wave_metrics_counts_and_hashes_match_the_wave(spark, corpus):
     """The JVM-side metrics pass: per-partition counts sum to the fetched
-    count, the hashes are xxhash64(url) of the fetched rows, and a filter
-    without a driver delta receives at most one row per partition."""
+    count, the hashes are xxhash64(url) of the fetched rows, the url bytes
+    are their sum of octet_length(url), and a filter without a driver delta
+    receives at most one row per partition."""
     from hepcrawl_spark.crawl.frontier import _wave_metrics
 
     fetched = corpus.filter(F.col("page_id") % 3 == 0).repartition(5, "host").persist()
@@ -1209,18 +1237,21 @@ def test_wave_metrics_counts_and_hashes_match_the_wave(spark, corpus):
                 lambda i, rows: [(i, sum(1 for _ in rows))]
             ).filter(lambda p: p[1] > 0).collect()
         )
-        counts, hashes = _wave_metrics(fetched, with_hashes=True)
+        url_bytes = fetched.agg(F.sum(F.octet_length("url"))).first()[0]
+        counts, hashes, nbytes = _wave_metrics(fetched, with_hashes=True)
         assert counts == per_partition
         assert sum(n for _, n in counts) == fetched.count()
         expected = sorted(
             r[0] for r in fetched.select(F.xxhash64("url")).collect()
         )
         assert hashes.dtype == "int64" and sorted(hashes.tolist()) == expected
+        assert nbytes == url_bytes
 
-        counts_only, no_hashes = _wave_metrics(fetched, with_hashes=False)
+        counts_only, no_hashes, nbytes = _wave_metrics(fetched, with_hashes=False)
         assert no_hashes is None
         assert counts_only == per_partition
         assert len(counts_only) <= fetched.rdd.getNumPartitions()
+        assert nbytes == url_bytes
     finally:
         fetched.unpersist()
 
@@ -1273,11 +1304,16 @@ def test_local_frame_is_a_local_relation_pruned_when_empty(spark):
 
 
 @pytest.mark.parametrize("filter_mode", ["bloom", "cuckoo"])
-def test_probe_broadcasts_are_released(spark, corpus, seeds, tmp_path, monkeypatch, filter_mode):
+def test_probe_broadcasts_are_released(
+    spark, corpus, seeds, tmp_path, monkeypatch, filter_mode, no_broadcast
+):
     """The probe runs at link admission, once per iteration after the
-    first, and broadcasts the whole filter. Once the wave's cached frames
-    are unpersisted its broadcast is destroyed: a new one is made only when
-    all earlier ones are gone, and none outlives the crawl."""
+    first (nothing is broadcast by size, so every such iteration probes).
+    The cuckoo probe broadcasts the whole filter to its UDF: once the
+    wave's cached frames are unpersisted its broadcast is destroyed, a new
+    one is made only when all earlier ones are gone, and none outlives the
+    crawl. The bloom probe is a JVM join and makes no Python broadcast.
+    Either way the crawl leaves no more persisted RDDs than it found."""
     from pyspark import SparkContext
 
     made, live_when_made = [], []
@@ -1289,6 +1325,7 @@ def test_probe_broadcasts_are_released(spark, corpus, seeds, tmp_path, monkeypat
         return made[-1]
 
     monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    persisted_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     res = run_crawl(
         spark, corpus, seeds,
         CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
@@ -1296,9 +1333,13 @@ def test_probe_broadcasts_are_released(spark, corpus, seeds, tmp_path, monkeypat
                     n_expected_urls=5000),
     )
     assert len(res.iterations) == 4
-    assert len(made) == 3  # waves 1-3 probe; wave 0 has nothing to probe
-    assert live_when_made == [0, 0, 0]
+    if filter_mode == "bloom":
+        assert made == []
+    else:
+        assert len(made) == 3  # waves 1-3 probe; wave 0 has nothing to probe
+        assert live_when_made == [0, 0, 0]
     assert not any(b._jbroadcast.isValid() for b in made)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted_before
 
 
 # the fixed job descriptions run_crawl gives its stages
@@ -1337,3 +1378,142 @@ def test_every_crawl_job_is_named_by_its_stage(spark, corpus, seeds, tmp_path):
         desc = store.job(job_id).description()
         names.append(desc.get() if desc.isDefined() else None)
     assert set(names) == CRAWL_STAGES, set(names) ^ CRAWL_STAGES
+
+
+def test_broadcast_threshold_prefers_the_aqe_setting(spark):
+    """The probe decision reads the threshold AQE re-plans joins with: the
+    adaptive one when set, else spark.sql.autoBroadcastJoinThreshold."""
+    from hepcrawl_spark.crawl.frontier import _broadcast_threshold
+
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    plain = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    assert _broadcast_threshold(spark) == plain
+    spark.conf.set(key, "1k")
+    try:
+        assert _broadcast_threshold(spark) == 1024
+    finally:
+        spark.conf.unset(key)
+    assert _broadcast_threshold(spark) == plain
+
+
+def _count_probes(monkeypatch, filter_mode):
+    """Patch the filter's ``_maybe`` to record each call; returns the list."""
+    from hepcrawl_spark.crawl import frontier as fr
+
+    cls = fr._SEEN_FILTERS[filter_mode]
+    calls, real = [], cls._maybe
+    monkeypatch.setattr(
+        cls, "_maybe", lambda self, links: (calls.append(1), real(self, links))[1]
+    )
+    return calls
+
+
+@pytest.mark.parametrize("filter_mode", ["bloom", "bloom_table", "cuckoo"])
+def test_filter_probes_only_when_admission_would_shuffle(
+    spark, corpus, seeds, tmp_path, monkeypatch, request, filter_mode
+):
+    """url_seen is far under the default broadcast threshold, so link
+    admission's exact anti-join is a broadcast join and no crawl probes the
+    filter. With broadcasting off, every iteration after the first probes
+    once. The crawl is the same either way."""
+    calls = _count_probes(monkeypatch, filter_mode)
+
+    def crawl(name):
+        calls.clear()
+        sd = str(tmp_path / name)
+        res = run_crawl(
+            spark, corpus, seeds,
+            CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
+                        filter_mode=filter_mode, state_dir=sd,
+                        n_expected_urls=5000),
+        )
+        assert len(res.iterations) == 4
+        return len(calls), [i.scheduled for i in res.iterations], _final_seen(spark, sd)
+
+    n_default, sched_default, seen_default = crawl("default")
+    request.getfixturevalue("no_broadcast")
+    n_probing, sched_probing, seen_probing = crawl("probing")
+    assert (n_default, n_probing) == (0, 3)
+    assert sched_default == sched_probing
+    assert seen_default == seen_probing
+
+
+def test_resume_decides_the_probe_from_the_manifest(spark, corpus, seeds, tmp_path, monkeypatch):
+    """The manifest carries seen_bytes, an upper bound on url_seen's url
+    bytes, so a resumed run makes the straight run's decision (no probe
+    here). A manifest without it probes, and the crawl is the same."""
+    from hepcrawl_spark.crawl.frontier import _write_manifest, read_manifest
+
+    calls = _count_probes(monkeypatch, "bloom")
+
+    def cfg(sd, iters):
+        return CrawlConfig(max_iterations=iters, max_per_host=15, salt=1,
+                           filter_mode="bloom", state_dir=sd, n_expected_urls=5000)
+
+    kept, dropped = str(tmp_path / "kept"), str(tmp_path / "dropped")
+    run_crawl(spark, corpus, seeds, cfg(kept, 2))
+    m = read_manifest(kept)
+    seen = spark.read.parquet(m["url_seen"])
+    assert m["seen_bytes"] >= seen.agg(F.sum(F.octet_length("url"))).first()[0] > 0
+    shutil.copytree(kept, dropped)
+    del m["seen_bytes"]
+    _write_manifest(dropped, m.pop("iteration"), m)
+
+    run_crawl(spark, corpus, seeds, cfg(kept, 4), resume=True)
+    assert calls == []
+    run_crawl(spark, corpus, seeds, cfg(dropped, 4), resume=True)
+    assert len(calls) == 2  # iterations 2 and 3
+    assert _final_seen(spark, kept) == _final_seen(spark, dropped)
+
+
+def test_bloom_admission_plan_has_no_python_eval(
+    spark, corpus, seeds, tmp_path, monkeypatch, no_broadcast
+):
+    """The bloom probe is a broadcast join with JVM bit tests: the admission
+    plan, probe included, evaluates no Python UDF."""
+    from hepcrawl_spark.crawl import frontier as fr
+
+    plans, real = [], fr.SeenFilter.unseen
+
+    def unseen(self, links, url_seen, probe):
+        out = real(self, links, url_seen, probe)
+        if probe:
+            plans.append(out._jdf.queryExecution().toString())
+        return out
+
+    monkeypatch.setattr(fr.SeenFilter, "unseen", unseen)
+    run_crawl(
+        spark, corpus, seeds,
+        CrawlConfig(max_iterations=2, max_per_host=15, salt=1, filter_mode="bloom",
+                    state_dir=str(tmp_path / "plan"), n_expected_urls=5000),
+    )
+    assert len(plans) == 1
+    assert "element_at(_words" in plans[0]
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plans[0], plans[0]
+
+
+def test_snapshot_read_back_schema_equals_the_inferred_one(
+    spark, corpus, seeds, tmp_path, monkeypatch
+):
+    """Every snapshot is read back with the schema it was written with, made
+    nullable; that schema is the one a parquet read infers from the files."""
+    from hepcrawl_spark.crawl import frontier as fr
+
+    read_back, real = {}, fr._snapshot
+
+    def snapshot(df, path):
+        out = real(df, path)
+        read_back[os.path.basename(path)] = (path, out.schema)
+        return out
+
+    monkeypatch.setattr(fr, "_snapshot", snapshot)
+    run_crawl(
+        spark, corpus, seeds,
+        CrawlConfig(max_iterations=2, max_per_host=15, salt=1,
+                    filter_mode="bloom_table", state_dir=str(tmp_path / "schema"),
+                    n_expected_urls=5000, host_budget=1000),
+    )
+    assert {"frontier", "url_seen", "host_used", "bloom_init"} <= set(read_back)
+    for name, (path, schema) in read_back.items():
+        assert schema == spark.read.parquet(path).schema, name

@@ -72,7 +72,10 @@ def reference_scheduler_replay(pages, seeds, max_per_host, max_iterations):
 
 
 @pytest.mark.parametrize("filter_mode", ["none", "bloom"])
-def test_crawl_matches_reference_scheduler(spark, tmp_path, filter_mode):
+def test_crawl_matches_reference_scheduler(spark, tmp_path, request, filter_mode):
+    if filter_mode == "bloom":
+        # nothing broadcast by size: link admission probes the filter
+        request.getfixturevalue("no_broadcast")
     corpus_df = synthesize_corpus(spark, n_pages=400, n_hosts=8, links_per_page=3)
     corpus_df = corpus_df.persist()
     seeds_df = corpus_df.orderBy("page_id").limit(12).select(
