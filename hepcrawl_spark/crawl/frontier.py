@@ -55,11 +55,10 @@ from ..operators import textstats as X
 from ..operators.bloom import (
     ShardedBloom,
     bloom_merge_delta_cogroup,
-    bloom_probe_broadcast,
     bloom_probe_cogroup,
-    bloom_words_frame,
     build_bloom_sharded,
     empty_bloom_shard_table,
+    sharded_might_contain_udf,
 )
 from ..operators.cuckoo import (
     ShardedCuckoo,
@@ -476,9 +475,8 @@ class SeenFilter:
 
 
 class BloomSeenFilter(SeenFilter):
-    """'bloom': the shard bitmaps live on the driver; the probe broadcast-
-    joins them as a (shard, words) LocalRelation and tests bits in the JVM.
-    Not persisted: resume rebuilds them from url_seen."""
+    """'bloom': the shard bitmaps live on the driver, broadcast into the
+    probe UDF; not persisted, resume rebuilds them from url_seen."""
 
     driver_delta = True
 
@@ -492,14 +490,8 @@ class BloomSeenFilter(SeenFilter):
             )
 
     def _maybe(self, links):
-        n_bits, k = self.bf.shape
-        return bloom_probe_broadcast(
-            links.withColumn("url_hash", F.xxhash64("url")),
-            bloom_words_frame(self.spark, self.bf),
-            n_bits,
-            k,
-            n_shards=self.bf.n_shards,
-        ).drop("url_hash")
+        self._probe_udf = sharded_might_contain_udf(self.spark, self.bf)
+        return links.withColumn("_maybe", self._probe_udf(F.xxhash64("url")))
 
     def absorb(self, fetched, hashes):
         self.bf.add(hashes)
@@ -746,46 +738,33 @@ def _fetch(gated: DataFrame, corpus: DataFrame) -> tuple[int, DataFrame]:
 
 
 def _wave_metrics(fetched: DataFrame, with_hashes: bool):
-    """ONE JVM-only pass over the fetched wave yields per-partition counts,
-    the wave's url bytes AND, when ``with_hashes``, its url hashes for a
-    driver-side filter delta. The driver receives an Arrow table of
-    (partition_id, hash, url bytes) per fetched url, or of (partition_id,
-    count, url bytes) per partition — never the filter, and no Python
-    worker runs.
-    Returns ([(partition_id, n)] by partition, int64 hashes or None,
-    total url bytes)."""
+    """ONE JVM-only pass over the fetched wave yields per-partition counts
+    AND, when ``with_hashes``, the wave's url hashes for a driver-side
+    filter delta. The driver receives an Arrow table of (partition_id,
+    hash) per fetched url, or of (partition_id, count) per partition —
+    never the filter, and no Python worker runs.
+    Returns ([(partition_id, n)] by partition, int64 hashes or None)."""
     pid = F.spark_partition_id().alias("partition_id")
-    nbytes = F.octet_length("url")
     if with_hashes:
-        t = fetched.select(
-            pid, F.xxhash64("url").alias("h"), nbytes.alias("b")
-        ).toArrow()
+        t = fetched.select(pid, F.xxhash64("url").alias("h")).toArrow()
         pids, counts = np.unique(
             np.asarray(t.column("partition_id"), dtype=np.int32), return_counts=True
         )
         hashes = np.asarray(t.column("h"), dtype=np.int64)
-        url_bytes = int(np.asarray(t.column("b"), dtype=np.int64).sum())
-        return list(zip(pids.tolist(), counts.tolist())), hashes, url_bytes
-    t = (  # one row per partition
-        fetched.groupBy(pid)
-        .agg(F.count("*").alias("count"), F.sum(nbytes).alias("b"))
-        .toArrow()
-    )
-    counts = zip(t.column("partition_id").to_pylist(), t.column("count").to_pylist())
-    url_bytes = sum(b or 0 for b in t.column("b").to_pylist())
-    return sorted(counts), None, url_bytes
+        return list(zip(pids.tolist(), counts.tolist())), hashes
+    t = fetched.groupBy(pid).count().toArrow()  # one row per partition
+    return sorted(zip(t.column("partition_id").to_pylist(), t.column("count").to_pylist())), None
 
 
-def _broadcast_threshold(spark: SparkSession) -> int:
-    """The session's broadcast-join size threshold in bytes, as AQE applies
-    it when it re-plans a join: spark.sql.adaptive.autoBroadcastJoinThreshold
-    when set, else spark.sql.autoBroadcastJoinThreshold. <= 0: never
-    broadcast."""
-    conf = spark._jsparkSession.sessionState().conf()
-    aqe = conf.getConf(
-        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD()
-    )
-    return aqe.get() if aqe.isDefined() else conf.autoBroadcastJoinThreshold()
+def _broadcasts_by_size(spark: SparkSession, df: DataFrame) -> bool:
+    """Whether a join would broadcast ``df`` as its build side, by Spark's
+    own rule (JoinSelection's canBroadcastBySize): the optimized plan's size
+    estimate lies within spark.sql.autoBroadcastJoinThreshold (<= 0: never
+    broadcast). The estimate is the files' size for a parquet read and the
+    origin plan's for a checkpoint; reading it runs no job."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= size <= limit
 
 
 def _rank_priorities(frontier: DataFrame, edges_path: str, iterations: int) -> DataFrame:
@@ -924,7 +903,7 @@ def _run_crawl(
     if cfg.max_depth is not None:
         link_meta = {**(link_meta or {}), "depth": (depth + 1).cast("string")}
     m = read_manifest(state_dir) if resume else None
-    start_iter = seen_size = seen_bytes = 0
+    start_iter = seen_size = 0
     host_used = None  # (host, used) budget-consumption state
     trap_tpls = None  # collected (host, template) trap flags (trap_detect_every)
     if m is not None:
@@ -944,9 +923,8 @@ def _run_crawl(
         else:
             url_seen = spark.read.parquet(f"{state_dir}/iter_{m['iteration']:04d}/url_seen")
         # the url_seen cardinality must survive the restart: the cuckoo
-        # rebuild is sized from it. Without seen_bytes the run probes.
+        # rebuild is sized from it
         seen_size = m.get("seen_size") or url_seen.count()
-        seen_bytes = m.get("seen_bytes")
     else:
         frontier = seeds.select(
             "url",
@@ -1005,12 +983,6 @@ def _run_crawl(
         # outside the loop can hold one, so gate the restored frontier once
         frontier = crawl_once_gate(frontier, url_seen, new_ts_col="discovered_ts")
 
-    # link admission probes the seen filter only when its exact anti-join
-    # would shuffle: while url_seen fits under the broadcast threshold, the
-    # broadcast hash join already probes an exact in-memory set (Spark's
-    # runtime bloom filter skips such joins by the same rule).
-    # seen_bytes bounds url_seen's url bytes from above, like seen_size.
-    broadcast_max = _broadcast_threshold(spark)
     result = CrawlResult()
     metrics_rows = []
 
@@ -1072,9 +1044,7 @@ def _run_crawl(
         # one action yields per-partition metrics (A2/north rule), the fetched
         # count, and the filter's delta hashes — fused into a single pass
         sc.setJobDescription("crawl: metrics")
-        part_metrics, hashes, url_bytes = _wave_metrics(
-            fetched, seen_filter.driver_delta
-        )
+        part_metrics, hashes = _wave_metrics(fetched, seen_filter.driver_delta)
         seen_filter.absorb(fetched, hashes)
         fetched_n = sum(n for _, n in part_metrics)
         # failed fetches: gated urls without a corpus row (a corpus holding
@@ -1139,11 +1109,12 @@ def _run_crawl(
         # attempt 0. Probing the raw links puts the filter's union under
         # the groupBy's shuffle (no extra frontier part-files), and on the
         # main thread, before persist() replaces the filter state in the
-        # commit pool. A fresh run's first wave has nothing to probe.
+        # commit pool. A fresh run's first wave has nothing to probe, and
+        # neither does a wave whose url_seen Spark would broadcast: the
+        # broadcast hash join already probes an exact in-memory set (Spark's
+        # runtime bloom filter skips such joins by the same rule).
         links = links.join(frontier.select("url"), "url", "left_anti")
-        probe = it > 0 and (
-            seen_bytes is None or broadcast_max <= 0 or seen_bytes > broadcast_max
-        )
+        probe = it > 0 and not _broadcasts_by_size(spark, url_seen.select("url"))
         candidates = (
             seen_filter.unseen(links, url_seen, probe=probe)
             .groupBy("url", "host")
@@ -1294,8 +1265,6 @@ def _run_crawl(
         else:
             new_frontier_size = -1
             seen_size += fetched_n  # upper bound (exact when urls are unique)
-        if seen_bytes is not None:
-            seen_bytes += url_bytes
 
         if durable:
             manifest = {
@@ -1305,7 +1274,6 @@ def _run_crawl(
                 else f"{it_dir}/url_seen",
                 "seen_store": cfg.seen_store,
                 "seen_size": seen_size,
-                "seen_bytes": seen_bytes,
                 "meta_live": meta_live,
                 **filter_fields,
             }

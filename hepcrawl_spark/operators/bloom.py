@@ -6,13 +6,13 @@ single-node, unscalable. Here the URL-seen fast path is a Bloom filter:
   build:  groupBy shard -> applyInPandas over the url_seen hash column ->
           one numpy bitmap per shard (vectorized bit ops) -> S small blobs
           on the driver.
-  probe:  a broadcast join of the hashes with the shard bitmaps as a
-          (shard, words array<bigint>) LocalRelation; the k bit tests are
-          plain JVM expressions, so no row crosses into Python. Rows that
-          *might* be seen go through the exact anti-join, rows that
-          definitely aren't skip it. That saves work only where the exact
-          anti-join is a shuffle join, so the crawl probes only while
-          url_seen is too large to broadcast.
+  probe:  vectorized pandas UDF 'might_contain' over the link hashes, the
+          shard bitmaps broadcast; rows that *might* be seen go through the
+          exact anti-join, rows that definitely aren't skip it. That saves
+          work only where the exact anti-join is a shuffle join, so the
+          crawl probes only while url_seen is too large to broadcast. At
+          10^10 URLs with a fresh-URL-heavy frontier it removes almost the
+          whole shuffle.
 
 Deletes (timestamp-invalidated crawl-once entries) can't be expressed in a
 Bloom filter — that's the cuckoo filter's job (operators/cuckoo.py), or a
@@ -20,8 +20,7 @@ per-snapshot rebuild (the filter is derived state; rebuilding from the
 url_seen table is one scan).
 
 Hashing: double hashing h_i = h1 + i*h2 over the already-64-bit xxhash64
-values (Kirsch-Mitzenmacher), all numpy-vectorized; ``bloom_probe_broadcast``
-repeats the same arithmetic in Spark SQL expressions.
+values (Kirsch-Mitzenmacher), all numpy-vectorized.
 """
 
 from __future__ import annotations
@@ -31,7 +30,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -98,11 +96,9 @@ class ShardedBloom:
     - delta: a wave's new hashes route to their shards; only touched shards
       rewrite (with Iceberg, a MERGE on the shard key).
 
-    While the shard bitmaps fit on the driver, the broadcast probe
-    (`bloom_words_frame` + `bloom_probe_broadcast`, JVM expressions only) is
-    cheaper and behaviourally identical; the paths are tested against each
-    other and against `might_contain`. `sharded_might_contain_udf` is the
-    pandas-UDF form of the same broadcast probe.
+    At sandbox scale the broadcast probe (`sharded_might_contain_udf`) is
+    cheaper and behaviourally identical, so both paths exist and are tested
+    against each other.
     """
 
     def __init__(self, shards: dict[int, BloomFilter], n_shards: int):
@@ -119,12 +115,6 @@ class ShardedBloom:
             {s: BloomFilter.sized_for(per_shard, fpp) for s in range(n_shards)},
             n_shards,
         )
-
-    @property
-    def shape(self) -> tuple[int, int]:
-        """(n_bits, k), the same for every shard."""
-        (shape,) = {(bf.n_bits, bf.k) for bf in self.shards.values()}
-        return shape
 
     def _sid(self, values: np.ndarray) -> np.ndarray:
         sid = np.mod(values.astype(np.int64), self.n_shards)
@@ -231,84 +221,6 @@ def sharded_might_contain_udf(spark: SparkSession, sb: ShardedBloom):
 
     _might_contain.broadcast = bcast
     return _might_contain
-
-
-def bloom_words_frame(spark: SparkSession, sb: ShardedBloom) -> DataFrame:
-    """The filter as a ``(shard int, words array<bigint>)`` LocalRelation,
-    one row per shard, built from Arrow (no Python RDD, JVM-scanned). A
-    shard's bitmap zero-padded to whole 8-byte words and read as
-    little-endian int64 is the same bitmap: bit ``p`` of the byte layout is
-    bit ``p & 63`` of word ``p >> 6``."""
-    shards = sorted(sb.shards)
-    words = [
-        np.concatenate(
-            [bits, np.zeros(-len(bits) % 8, dtype=np.uint8)]
-        ).view("<i8")
-        for bits in (sb.shards[s].bits for s in shards)
-    ]
-    offsets = np.concatenate([[0], np.cumsum([len(w) for w in words])])
-    table = pa.table(
-        {
-            "shard": pa.array(shards, type=pa.int32()),
-            "words": pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()),
-                pa.array(np.concatenate(words), type=pa.int64()),
-            ),
-        }
-    )
-    return spark.createDataFrame(table)
-
-
-def bloom_probe_broadcast(
-    frontier: DataFrame,
-    words: DataFrame,
-    n_bits: int,
-    k: int,
-    hash_col: str = "url_hash",
-    n_shards: int = 32,
-    out_col: str = "_maybe",
-) -> DataFrame:
-    """``BloomFilter.might_contain`` in the JVM: broadcast-join the rows on
-    ``pmod(hash, n_shards)`` with ``words`` (``bloom_words_frame``) and test
-    the k bits with Spark SQL expressions. With ``v`` the signed hash:
-
-      h1 = v mod n as unsigned: v % n when v >= 0, else
-           pmod(pmod(v, n) + 2^64 mod n, n) (the sum stays below 2n);
-      h2 = ((v >>> 33) | 1) mod n;
-      bit i (i < k) at (h1 + i*h2) mod n.
-
-    The k tests are unrolled: higher-order functions do not codegen. A row
-    whose shard has no row in ``words`` probes True (the exact anti-join
-    decides it)."""
-    n = F.lit(n_bits)
-    v = F.col(hash_col)
-    h1 = F.when(v >= 0, F.pmod(v, n)).otherwise(
-        F.pmod(F.pmod(v, n) + F.lit((1 << 64) % n_bits), n)
-    )
-    h2 = F.pmod(F.shiftrightunsigned(v, 33).bitwiseOR(F.lit(1)), n)
-    pos = [f"pmod(_h1 + {i} * _h2, {n_bits})" for i in range(k)]
-    maybe = " AND ".join(
-        f"(shiftright(element_at(_words, int(shiftright({p}, 6)) + 1), "
-        f"int({p} & 63)) & 1) = 1"
-        for p in pos
-    )
-    shard_words = words.select(
-        F.col("shard").alias("_shard"), F.col("words").alias("_words")
-    )
-    # h1 and h2 are computed below the join: a filter on out_col is then
-    # pushed down only as far as the join, with the k terms as written.
-    # Pushed through a projection of h1/h2, it would inline them into every
-    # term and outgrow whole-stage codegen (measured 5x slower on 1M rows).
-    return (
-        frontier.withColumn("_shard", F.pmod(v, F.lit(n_shards)).cast("int"))
-        .withColumn("_h1", h1)
-        .withColumn("_h2", h2)
-        .join(F.broadcast(shard_words), "_shard", "left")
-        .select(
-            *frontier.columns,
-            F.coalesce(F.expr(maybe), F.lit(True)).alias(out_col),
-        )
-    )
 
 
 def bloom_probe_cogroup(

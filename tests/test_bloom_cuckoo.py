@@ -3,12 +3,7 @@ import pyspark.sql.functions as F
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hepcrawl_spark.operators.bloom import (
-    BloomFilter,
-    ShardedBloom,
-    bloom_probe_broadcast,
-    bloom_words_frame,
-)
+from hepcrawl_spark.operators.bloom import BloomFilter
 from hepcrawl_spark.operators.cuckoo import CuckooFilter, build_cuckoo
 
 
@@ -114,8 +109,8 @@ def test_cuckoo_overflow_is_loud(spark):
 
 def test_sharded_bloom_build_and_probe_paths_agree(spark):
     """Distributed sharded build must have no false negatives, and the
-    zero-driver-state cogroup probe and the JVM broadcast probe must answer
-    exactly like the broadcast UDF probe on the same filter."""
+    zero-driver-state cogroup probe must answer exactly like the broadcast
+    probe on the same filter."""
     from hepcrawl_spark.operators.bloom import (
         bloom_probe_cogroup,
         build_bloom_sharded,
@@ -141,14 +136,6 @@ def test_sharded_bloom_build_and_probe_paths_agree(spark):
         for r in bloom_probe_cogroup(frontier, shard_table, n_shards=8).collect()
     }
     assert via_bcast == via_cogroup
-    n_bits, k = sb.shape
-    via_jvm = {
-        r["fid"]: r["_maybe"]
-        for r in bloom_probe_broadcast(
-            frontier, bloom_words_frame(spark, sb), n_bits, k, n_shards=8
-        ).collect()
-    }
-    assert via_jvm == via_bcast
     # first 4000 are inserted -> all True; fpp on the rest stays near 1%
     assert all(via_bcast[i] for i in range(4000))
     fp = sum(via_bcast[i] for i in range(4000, 8000)) / 4000
@@ -196,41 +183,3 @@ def test_cuckoo_empty_shards_sized_for_full_capacity(spark):
     delta = np.arange(0, 50_000, dtype=np.int64) * 2654435761 % (2**62)
     assert ccf.insert_batch(delta.astype(np.uint64)) == 0
     assert ccf.might_contain(delta.astype(np.uint64)).all()
-
-
-_INT64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
-# (n_items, n_shards): per-shard n_bits 1150, 1437, 1792 (a multiple of 64)
-# and 17253; every bitmap but the 144-byte one of 1150 bits is zero-padded
-# to whole 8-byte words
-_BLOOM_SHAPES = [(100, 1), (1000, 8), (5000, 32), (12000, 8)]
-
-
-@given(
-    shape=st.sampled_from(_BLOOM_SHAPES),
-    inserted=st.lists(_INT64, max_size=300),
-    probes=st.lists(_INT64, max_size=300),
-)
-@settings(max_examples=30, deadline=None)
-def test_jvm_bloom_probe_matches_numpy_bit_for_bit(spark, shape, inserted, probes):
-    """bloom_probe_broadcast answers exactly like ShardedBloom.might_contain
-    on random int64 hashes, negative ones and the int64 extremes included,
-    with every shard holding at least one key."""
-    n_items, n_shards = shape
-    sb = ShardedBloom.sized_for(n_items, n_shards=n_shards)
-    # -S..S-1 covers every residue mod S: no shard stays empty
-    every_shard = list(range(-n_shards, n_shards))
-    sb.add(np.array(inserted + every_shard, dtype=np.int64))
-    edges = [0, 1, -1, -(2**63), 2**63 - 1]
-    values = inserted + probes + every_shard + edges
-    hashes = spark.createDataFrame(
-        list(enumerate(values)), "i long, url_hash long"
-    )
-    n_bits, k = sb.shape
-    got = {
-        r["i"]: r["_maybe"]
-        for r in bloom_probe_broadcast(
-            hashes, bloom_words_frame(spark, sb), n_bits, k, n_shards=n_shards
-        ).collect()
-    }
-    expected = sb.might_contain(np.array(values, dtype=np.int64))
-    assert [got[i] for i in range(len(values))] == expected.tolist()

@@ -103,7 +103,7 @@ def test_bloom_table_mode_keeps_filter_off_the_driver(
         raise AssertionError("driver-side filter state touched in bloom_table mode")
 
     monkeypatch.setattr(FR, "build_bloom_sharded", _boom)
-    monkeypatch.setattr(FR, "bloom_words_frame", _boom)
+    monkeypatch.setattr(FR, "sharded_might_contain_udf", _boom)
     monkeypatch.setattr(FR, "build_cuckoo", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "add", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "might_contain", _boom)
@@ -157,7 +157,7 @@ def test_auto_filter_mode_switches_on_scale(
         raise AssertionError("driver-side filter state touched in auto mode")
 
     monkeypatch.setattr(FR, "build_bloom_sharded", _boom)
-    monkeypatch.setattr(FR, "bloom_words_frame", _boom)
+    monkeypatch.setattr(FR, "sharded_might_contain_udf", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "add", _boom)
     monkeypatch.setattr(FR.ShardedBloom, "might_contain", _boom)
     sd_big = str(tmp_path / "auto_big")
@@ -1225,9 +1225,8 @@ def test_scheduled_is_exact_and_errors_count_failed_fetches(spark, corpus, seeds
 
 def test_wave_metrics_counts_and_hashes_match_the_wave(spark, corpus):
     """The JVM-side metrics pass: per-partition counts sum to the fetched
-    count, the hashes are xxhash64(url) of the fetched rows, the url bytes
-    are their sum of octet_length(url), and a filter without a driver delta
-    receives at most one row per partition."""
+    count, the hashes are xxhash64(url) of the fetched rows, and a filter
+    without a driver delta receives at most one row per partition."""
     from hepcrawl_spark.crawl.frontier import _wave_metrics
 
     fetched = corpus.filter(F.col("page_id") % 3 == 0).repartition(5, "host").persist()
@@ -1237,21 +1236,18 @@ def test_wave_metrics_counts_and_hashes_match_the_wave(spark, corpus):
                 lambda i, rows: [(i, sum(1 for _ in rows))]
             ).filter(lambda p: p[1] > 0).collect()
         )
-        url_bytes = fetched.agg(F.sum(F.octet_length("url"))).first()[0]
-        counts, hashes, nbytes = _wave_metrics(fetched, with_hashes=True)
+        counts, hashes = _wave_metrics(fetched, with_hashes=True)
         assert counts == per_partition
         assert sum(n for _, n in counts) == fetched.count()
         expected = sorted(
             r[0] for r in fetched.select(F.xxhash64("url")).collect()
         )
         assert hashes.dtype == "int64" and sorted(hashes.tolist()) == expected
-        assert nbytes == url_bytes
 
-        counts_only, no_hashes, nbytes = _wave_metrics(fetched, with_hashes=False)
+        counts_only, no_hashes = _wave_metrics(fetched, with_hashes=False)
         assert no_hashes is None
         assert counts_only == per_partition
         assert len(counts_only) <= fetched.rdd.getNumPartitions()
-        assert nbytes == url_bytes
     finally:
         fetched.unpersist()
 
@@ -1308,12 +1304,10 @@ def test_probe_broadcasts_are_released(
     spark, corpus, seeds, tmp_path, monkeypatch, filter_mode, no_broadcast
 ):
     """The probe runs at link admission, once per iteration after the
-    first (nothing is broadcast by size, so every such iteration probes).
-    The cuckoo probe broadcasts the whole filter to its UDF: once the
-    wave's cached frames are unpersisted its broadcast is destroyed, a new
-    one is made only when all earlier ones are gone, and none outlives the
-    crawl. The bloom probe is a JVM join and makes no Python broadcast.
-    Either way the crawl leaves no more persisted RDDs than it found."""
+    first (nothing is broadcast by size, so every such iteration probes),
+    and broadcasts the whole filter. Once the wave's cached frames
+    are unpersisted its broadcast is destroyed: a new one is made only when
+    all earlier ones are gone, and none outlives the crawl."""
     from pyspark import SparkContext
 
     made, live_when_made = [], []
@@ -1325,7 +1319,6 @@ def test_probe_broadcasts_are_released(
         return made[-1]
 
     monkeypatch.setattr(SparkContext, "broadcast", broadcast)
-    persisted_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     res = run_crawl(
         spark, corpus, seeds,
         CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
@@ -1333,13 +1326,9 @@ def test_probe_broadcasts_are_released(
                     n_expected_urls=5000),
     )
     assert len(res.iterations) == 4
-    if filter_mode == "bloom":
-        assert made == []
-    else:
-        assert len(made) == 3  # waves 1-3 probe; wave 0 has nothing to probe
-        assert live_when_made == [0, 0, 0]
+    assert len(made) == 3  # waves 1-3 probe; wave 0 has nothing to probe
+    assert live_when_made == [0, 0, 0]
     assert not any(b._jbroadcast.isValid() for b in made)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted_before
 
 
 # the fixed job descriptions run_crawl gives its stages
@@ -1380,32 +1369,50 @@ def test_every_crawl_job_is_named_by_its_stage(spark, corpus, seeds, tmp_path):
     assert set(names) == CRAWL_STAGES, set(names) ^ CRAWL_STAGES
 
 
-def test_broadcast_threshold_prefers_the_aqe_setting(spark):
-    """The probe decision reads the threshold AQE re-plans joins with: the
-    adaptive one when set, else spark.sql.autoBroadcastJoinThreshold."""
-    from hepcrawl_spark.crawl.frontier import _broadcast_threshold
+def _spy_probe_decisions(spark, monkeypatch, filter_mode):
+    """Record each link admission's probe decision and each ``_maybe`` call.
 
-    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    plain = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    assert _broadcast_threshold(spark) == plain
-    spark.conf.set(key, "1k")
-    try:
-        assert _broadcast_threshold(spark) == 1024
-    finally:
-        spark.conf.unset(key)
-    assert _broadcast_threshold(spark) == plain
-
-
-def _count_probes(monkeypatch, filter_mode):
-    """Patch the filter's ``_maybe`` to record each call; returns the list."""
+    Returns (decisions, calls): ``decisions`` gets one (size estimate,
+    decision, planned) per iteration after the first, where ``planned`` is
+    whether Spark plans an anti-join against the same url_seen frame as a
+    BroadcastHashJoin; ``calls`` gets one entry per probe."""
     from hepcrawl_spark.crawl import frontier as fr
 
+    decisions, real_decide = [], fr._broadcasts_by_size
+
+    def decide(spark_, df):
+        out = real_decide(spark_, df)
+        left = spark.createDataFrame([("x",)], "url string")
+        plan = left.join(df, "url", "left_anti")._jdf.queryExecution().sparkPlan()
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        decisions.append((int(size), out, "BroadcastHashJoin" in plan.toString()))
+        return out
+
     cls = fr._SEEN_FILTERS[filter_mode]
-    calls, real = [], cls._maybe
+    calls, real_maybe = [], cls._maybe
+    monkeypatch.setattr(fr, "_broadcasts_by_size", decide)
     monkeypatch.setattr(
-        cls, "_maybe", lambda self, links: (calls.append(1), real(self, links))[1]
+        cls, "_maybe", lambda self, links: (calls.append(1), real_maybe(self, links))[1]
     )
-    return calls
+    return decisions, calls
+
+
+def _probed_crawl(spark, corpus, seeds, state_dir, filter_mode, spy, **kw):
+    """A 4-iteration crawl -> (probes, decisions, schedule, final url_seen)."""
+    decisions, calls = spy
+    decisions.clear()
+    calls.clear()
+    res = run_crawl(
+        spark, corpus, seeds,
+        CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
+                    filter_mode=filter_mode, state_dir=state_dir,
+                    n_expected_urls=5000, **kw),
+    )
+    assert len(res.iterations) == 4
+    return (
+        len(calls), list(decisions), [i.scheduled for i in res.iterations],
+        _final_seen(spark, state_dir),
+    )
 
 
 @pytest.mark.parametrize("filter_mode", ["bloom", "bloom_table", "cuckoo"])
@@ -1415,82 +1422,51 @@ def test_filter_probes_only_when_admission_would_shuffle(
     """url_seen is far under the default broadcast threshold, so link
     admission's exact anti-join is a broadcast join and no crawl probes the
     filter. With broadcasting off, every iteration after the first probes
-    once. The crawl is the same either way."""
-    calls = _count_probes(monkeypatch, filter_mode)
-
-    def crawl(name):
-        calls.clear()
-        sd = str(tmp_path / name)
-        res = run_crawl(
-            spark, corpus, seeds,
-            CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
-                        filter_mode=filter_mode, state_dir=sd,
-                        n_expected_urls=5000),
-        )
-        assert len(res.iterations) == 4
-        return len(calls), [i.scheduled for i in res.iterations], _final_seen(spark, sd)
-
-    n_default, sched_default, seen_default = crawl("default")
+    once. Each decision is the join Spark plans, and the crawl is the same
+    either way."""
+    spy = _spy_probe_decisions(spark, monkeypatch, filter_mode)
+    n_default, dec_default, sched_default, seen_default = _probed_crawl(
+        spark, corpus, seeds, str(tmp_path / "default"), filter_mode, spy
+    )
     request.getfixturevalue("no_broadcast")
-    n_probing, sched_probing, seen_probing = crawl("probing")
+    n_probing, dec_probing, sched_probing, seen_probing = _probed_crawl(
+        spark, corpus, seeds, str(tmp_path / "probing"), filter_mode, spy
+    )
     assert (n_default, n_probing) == (0, 3)
+    assert [(d, p) for _, d, p in dec_default] == [(True, True)] * 3
+    assert [(d, p) for _, d, p in dec_probing] == [(False, False)] * 3
     assert sched_default == sched_probing
     assert seen_default == seen_probing
 
 
-def test_resume_decides_the_probe_from_the_manifest(spark, corpus, seeds, tmp_path, monkeypatch):
-    """The manifest carries seen_bytes, an upper bound on url_seen's url
-    bytes, so a resumed run makes the straight run's decision (no probe
-    here). A manifest without it probes, and the crawl is the same."""
-    from hepcrawl_spark.crawl.frontier import _write_manifest, read_manifest
-
-    calls = _count_probes(monkeypatch, "bloom")
-
-    def cfg(sd, iters):
-        return CrawlConfig(max_iterations=iters, max_per_host=15, salt=1,
-                           filter_mode="bloom", state_dir=sd, n_expected_urls=5000)
-
-    kept, dropped = str(tmp_path / "kept"), str(tmp_path / "dropped")
-    run_crawl(spark, corpus, seeds, cfg(kept, 2))
-    m = read_manifest(kept)
-    seen = spark.read.parquet(m["url_seen"])
-    assert m["seen_bytes"] >= seen.agg(F.sum(F.octet_length("url"))).first()[0] > 0
-    shutil.copytree(kept, dropped)
-    del m["seen_bytes"]
-    _write_manifest(dropped, m.pop("iteration"), m)
-
-    run_crawl(spark, corpus, seeds, cfg(kept, 4), resume=True)
-    assert calls == []
-    run_crawl(spark, corpus, seeds, cfg(dropped, 4), resume=True)
-    assert len(calls) == 2  # iterations 2 and 3
-    assert _final_seen(spark, kept) == _final_seen(spark, dropped)
-
-
-def test_bloom_admission_plan_has_no_python_eval(
-    spark, corpus, seeds, tmp_path, monkeypatch, no_broadcast
+def test_probe_starts_when_url_seen_outgrows_the_threshold(
+    spark, corpus, seeds, tmp_path, monkeypatch
 ):
-    """The bloom probe is a broadcast join with JVM bit tests: the admission
-    plan, probe included, evaluates no Python UDF."""
-    from hepcrawl_spark.crawl import frontier as fr
-
-    plans, real = [], fr.SeenFilter.unseen
-
-    def unseen(self, links, url_seen, probe):
-        out = real(self, links, url_seen, probe)
-        if probe:
-            plans.append(out._jdf.queryExecution().toString())
-        return out
-
-    monkeypatch.setattr(fr.SeenFilter, "unseen", unseen)
-    run_crawl(
-        spark, corpus, seeds,
-        CrawlConfig(max_iterations=2, max_per_host=15, salt=1, filter_mode="bloom",
-                    state_dir=str(tmp_path / "plan"), n_expected_urls=5000),
+    """With the broadcast threshold between url_seen's early and late size
+    estimates, the crawl stops broadcasting url_seen part-way and probes
+    from then on: each iteration probes exactly when Spark plans its
+    anti-join as a shuffle join. Checkpointed (snapshot_every=2) and
+    parquet url_seen frames are both decided by their plan estimates."""
+    spy = _spy_probe_decisions(spark, monkeypatch, "bloom")
+    kw = dict(snapshot_every=2)
+    _, first, sched, seen = _probed_crawl(
+        spark, corpus, seeds, str(tmp_path / "sizes"), "bloom", spy, **kw
     )
-    assert len(plans) == 1
-    assert "element_at(_words" in plans[0]
-    for node in ("ArrowEvalPython", "BatchEvalPython"):
-        assert node not in plans[0], plans[0]
+    sizes = sorted(size for size, _, _ in first)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(sizes[1]))
+    try:
+        n, decisions, sched_mid, seen_mid = _probed_crawl(
+            spark, corpus, seeds, str(tmp_path / "mid"), "bloom", spy, **kw
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert [d for _, d, _ in decisions] == [s <= sizes[1] for s, _, _ in decisions]
+    assert all(d == p for _, d, p in decisions)
+    assert {d for _, d, _ in decisions} == {True, False}
+    assert n == sum(not d for _, d, _ in decisions)
+    assert (sched_mid, seen_mid) == (sched, seen)
 
 
 def test_snapshot_read_back_schema_equals_the_inferred_one(

@@ -39,25 +39,20 @@ def test_crawl_once_gate_semantics(spark):
 
 def test_crawl_once_gate_with_prefilter_matches_exact(spark):
     from hepcrawl_spark.operators.bloom import (
-        bloom_probe_broadcast,
-        bloom_words_frame,
         build_bloom_sharded,
+        sharded_might_contain_udf,
     )
 
     fr, seen = _frontier(spark), _seen(spark)
     sb = build_bloom_sharded(
         seen.select(F.xxhash64("url").alias("url_hash")), n_items=3, n_shards=4
     )
-    n_bits, k = sb.shape
-    probed = bloom_probe_broadcast(
-        fr.withColumn("url_hash", F.xxhash64("url")),
-        bloom_words_frame(spark, sb),
-        n_bits,
-        k,
-        n_shards=4,
-        out_col="_m",
+    probe = sharded_might_contain_udf(spark, sb)
+    out = D.crawl_once_gate(
+        fr.withColumn("_m", probe(F.xxhash64("url"))),
+        seen,
+        might_be_seen=F.col("_m"),
     )
-    out = D.crawl_once_gate(probed, seen, might_be_seen=F.col("_m"))
     assert {r["url"] for r in out.collect()} == {"u1", "u2"}
 
 
